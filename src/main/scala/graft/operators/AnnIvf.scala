@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
+  IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorOps
@@ -1085,20 +1087,79 @@ object AnnIvf {
       hotBefore, hotCount(published), recovered)
   }
 
-  /** ANN search: probe → pruned per-partition exact top-k → global merge.
+  /** One request's centroid probe, computed on the driver by
+    * [[probeQueries]]: `pairs` is a local relation (`query_id`,
+    * `partition_id`, `__query_vec`, `pscore`) of the top-`nprobe`
+    * partitions per query, `partitionIds` the distinct probed ids
+    * ascending, and `queryRows` the collected (`query_id`, `__query_vec`)
+    * batch. */
+  private[graft] final case class Probe(
+      pairs: DataFrame, partitionIds: Array[Int], queryRows: Array[Row]) {
+    /** The query batch as a local relation (`query_id`, `__query_vec`). */
+    def queries: DataFrame = pairs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(queryRows: _*),
+      StructType(Seq(pairs.schema("query_id"), pairs.schema("__query_vec"))))
+  }
+
+  /** Centroid probe shared by every serving search — the reference's
+    * "leader search first" (neighborhood_server.py:181-185): score the
+    * query batch against the centroid table in process, keep the top
+    * `nprobe` partitions per query (score descending, then partition_id
+    * ascending; none when `nprobe ≤ 0`). Both inputs are driver-bounded:
+    * the batch is the broadcast side of every search (serving contract)
+    * and the centroid table is capped at [[ServeNlistCap]]. Scoring runs
+    * [[CentroidGemm.topProbes]], the kernel [[knnJoin]]'s executor probe
+    * uses, so the probe costs no Spark job beyond collecting the two
+    * inputs.
     *
-    * With `nprobe = nlist` this is exact (equals brute force) — the
-    * property test in AnnIvfSpec. Queries are broadcast (serving contract:
-    * the query batch is small; the corpus is the 100 TB side). */
-  /** Centroid probe (J2) shared by every search flavor: tiny theta-join
-    * against the broadcast leader table, top-`nprobe` partitions per
-    * query. `q` must carry (`query_id`, `__query_vec`). */
-  private[operators] def probeStep(index: Index, q: DataFrame, nprobe: Int): DataFrame =
-    Knn.topKPerGroup(
-      q.crossJoin(broadcast(index.centroids))
-        .withColumn("pscore", VectorOps.dot(col("__query_vec"), col("centroid"))),
-      Seq(col("query_id")), nprobe, desc("pscore"), asc("partition_id"))
-      .select(col("query_id"), col("partition_id"), col("__query_vec"), col("pscore"))
+    * `q` must carry (`query_id`, `__query_vec: array<float>`). Bad input
+    * fails here, naming the query: a null vector, a vector whose dim
+    * differs from the centroids', or a duplicated query id (a search
+    * groups its results by id, so two vectors under one id would merge
+    * into one top-k over both). */
+  private[graft] def probeQueries(index: Index, q: DataFrame, nprobe: Int,
+      caller: String): Probe = {
+    q.schema("__query_vec").dataType match {
+      case ArrayType(FloatType, _) =>
+      case t => throw new IllegalArgumentException(
+        s"$caller: query vectors must be array<float>, got ${t.sql}")
+    }
+    val rows = q.collect()
+    val centers = centerMap(index)
+    val pids = centers.keys.toArray.sorted
+    val (flat, nlist, dim) = CentroidGemm.flatten(pids.map(centers))
+    val seen = new java.util.HashSet[Any]()
+    val vecs = rows.map { r =>
+      val id = r.get(0)
+      require(seen.add(id), s"$caller: duplicate query id $id — each " +
+        "query needs a distinct id (results are grouped by it)")
+      require(!r.isNullAt(1), s"$caller: query $id has a null vector")
+      val v = CentroidGemm.toFloatArray(r.getSeq[Float](1))
+      require(nlist == 0 || v.length == dim, s"$caller: query $id has " +
+        s"dim ${v.length}, the index centroids have dim $dim")
+      v
+    }
+    val out = new java.util.ArrayList[Row]()
+    val probed = new Array[Boolean](nlist)
+    val np = math.max(0, math.min(nprobe, nlist))
+    vecs.indices.grouped(CentroidGemm.BlockSize).foreach { block =>
+      val (top, scores) =
+        CentroidGemm.topProbes(block.map(vecs).toArray, flat, nlist, dim, np)
+      var j = 0
+      while (j < top.length) {
+        val r = rows(block(j / np))
+        out.add(Row(r.get(0), pids(top(j)), r.get(1), scores(j)))
+        probed(top(j)) = true
+        j += 1
+      }
+    }
+    val schema = StructType(Seq(q.schema("query_id"),
+      StructField("partition_id", IntegerType, nullable = false),
+      q.schema("__query_vec"),
+      StructField("pscore", DoubleType, nullable = false)))
+    Probe(q.sparkSession.createDataFrame(out, schema),
+      pids.indices.filter(probed).map(pids).toArray, rows)
+  }
 
   /** Partition-id → centroid array, driver-resident (the leader table is
     * nlist·dim floats — the same bound every probe relies on). */
@@ -1113,12 +1174,18 @@ object AnnIvf {
     * reference exposes the knob but not the measurement). */
   def probePartitions(index: Index, queries: DataFrame, queryIdCol: String,
       vecCol: String, nprobe: Int): DataFrame =
-    probeStep(index,
+    probeQueries(index,
       queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__query_vec")),
-      nprobe)
-      .select("query_id", "partition_id")
+      nprobe, "AnnIvf.probePartitions")
+      .pairs.select("query_id", "partition_id")
 
-  /** `candidateFilter` is PRE-FILTERED vector search: the predicate (over
+  /** ANN search: probe → pruned per-partition exact top-k → global merge.
+    *
+    * With `nprobe = nlist` this is exact (equals brute force) — the
+    * property test in AnnIvfSpec. Queries are broadcast (serving contract:
+    * the query batch is small; the corpus is the 100 TB side).
+    *
+    * `candidateFilter` is PRE-FILTERED vector search: the predicate (over
     * the candidate row — metadata columns, id, and `query_id` are all in
     * scope) is applied inside the probed partitions BEFORE scoring and
     * top-k, so the k results all satisfy it (post-filtering top-k instead
@@ -1140,8 +1207,8 @@ object AnnIvf {
     val q = queries.select(
       col(queryIdCol).as("query_id"), col(vecCol).as("__query_vec"))
 
-    // 1. centroid probe (J2): tiny theta-join, top-nprobe partitions/query.
-    val probed = probeStep(index, q, nprobe).drop("pscore")
+    // 1. centroid probe (J2): top-nprobe partitions/query, on the driver.
+    val probed = probeQueries(index, q, nprobe, "AnnIvf.search").pairs.drop("pscore")
 
     // 2. pruned candidate join (J3/P4): equi-join on partition_id; on the
     // durable layout this hits Parquet PartitionFilters. The membership
@@ -1192,7 +1259,8 @@ object AnnIvf {
       score: (Column, Column) => Column = VectorOps.dot(_, _)): DataFrame = {
     val q = queries.select(
       col(queryIdCol).as("query_id"), col(vecCol).as("__query_vec"))
-    val probed = probeStep(index, q, nprobe).drop("pscore")
+    val probed = probeQueries(index, q, nprobe, "AnnIvf.rangeSearch")
+      .pairs.drop("pscore")
     val cands = broadcast(probed).join(index.assigned, Seq("partition_id"))
     val filtered =
       if (excludeSelf) cands.filter(col(idCol) =!= col("query_id"))
@@ -1219,7 +1287,8 @@ object AnnIvf {
       idCol: String = "vec_id"): DataFrame = {
     val q = queries.select(
       col(queryIdCol).as("query_id"), col(vecCol).as("__query_vec"))
-    val probed = probeStep(index, q, nprobe).drop("pscore")
+    val probed = probeQueries(index, q, nprobe, "AnnIvf.searchVerbose")
+      .pairs.drop("pscore")
     val scored = broadcast(probed)
       .join(index.assigned, Seq("partition_id"))
       .withColumn("score", VectorOps.dot(col(vecCol), col("__query_vec")))
@@ -1239,8 +1308,10 @@ object AnnIvf {
     * the corpus, like the reference's `local_{p}.index` loads
     * (neighborhood_server.py:209-224) but without a serving tier.
     *
-    * The probe materialization is a driver round-trip of ≤ |queries|·nprobe
-    * ints — the same "leader search first" sequencing the reference does. */
+    * The probe runs on the driver before the plan is built
+    * ([[probeQueries]]), so the partition list is known up front — the
+    * same "leader search first" sequencing the reference does, with no
+    * Spark job for the probe itself. */
   def searchPruned(
       index: Index,
       queries: DataFrame,
@@ -1252,12 +1323,11 @@ object AnnIvf {
       candidateFilter: Column = lit(true)): DataFrame = {
     val q = queries.select(
       col(queryIdCol).as("query_id"), col(vecCol).as("__query_vec"))
-    val probed = probeStep(index, q, nprobe).drop("pscore")
-    val probedIds = probed.select("partition_id").distinct()
-      .collect().map(_.get(0))
+    val probe = probeQueries(index, q, nprobe, "AnnIvf.searchPruned")
     val prunedVectors = index.assigned
-      .filter(col("partition_id").isin(probedIds.toSeq: _*))
-    val cands = broadcast(probed).join(prunedVectors, Seq("partition_id"))
+      .filter(col("partition_id").isin(probe.partitionIds.toSeq: _*))
+    val cands = broadcast(probe.pairs.drop("pscore"))
+      .join(prunedVectors, Seq("partition_id"))
       .filter(candidateFilter)
     Knn.topKPerGroup(
       cands.withColumn("score",
@@ -1301,13 +1371,13 @@ object AnnIvf {
       querySide: Column = lit(true),
       candidateFilter: Column = lit(true)): DataFrame = {
     val candidateBase = index.assigned.filter(candidateFilter)
-    val centers = index.centroids.orderBy("partition_id")
-      .collect().map(_.getSeq[Float](1).toArray)
+    val centers = centerMap(index)
+    val pids = centers.keys.toArray.sorted
     // corpus-sized probe side → blocked-gemm multi-probe, not a per-row UDF
     val queries = CentroidGemm.probe(
         index.assigned.filter(querySide).select(
           col(idCol).as("query_id"), col(vecCol).as("__query_vec")),
-        "__query_vec", centers, nprobe)
+        "__query_vec", pids.map(centers), nprobe, ids = pids)
       .select(col("query_id"), col("__query_vec"),
         explode(col("__probes")).as("partition_id"))
     // skew spreading: on a salted durable layout the probe side explodes

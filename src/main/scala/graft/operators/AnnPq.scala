@@ -525,9 +525,10 @@ object AnnPq {
     * ONCE per query as one executor broadcast, and candidate rows carry
     * only (query_id, id, m-byte code) — an earlier draft that attached
     * the LUT as a column repeated ~8 KB through every joined candidate
-    * row and was 5× slower at sf0.1. The driver-side query collect is
-    * the same serving-contract bound as [[AnnIvf.searchPruned]]'s probe
-    * round-trip (the query batch is small; the corpus is the big side).
+    * row and was 5× slower at sf0.1. The query batch is collected once,
+    * by the driver-side centroid probe ([[AnnIvf.probeQueries]]) that
+    * also feeds the LUTs — the serving-contract bound of every search
+    * (the query batch is small; the corpus is the big side).
     *
     * Broadcast lifecycle: the LUT broadcast lives exactly as long as the
     * returned (lazy) plan — it cannot be destroyed here without breaking
@@ -592,23 +593,18 @@ object AnnPq {
       residual: Boolean = false):
       (DataFrame, org.apache.spark.broadcast.Broadcast[Map[Long, Array[Float]]]) = {
     val spark = queries.sparkSession
-    import spark.implicits._
     requireIntegralId(queries, queryIdCol, "AnnPq.searchADC")
     val q = queries.select(
       col(queryIdCol).cast("long").as("query_id"), col(vecCol).as("__query_vec"))
     // residual mode keeps the probe's ⟨q, c_p⟩ term: candidate score =
     // pscore + ADC over the residual codes (linear decomposition)
-    val probed = AnnIvf.probeStep(index, q, nprobe)
-      .select("query_id", "partition_id", "pscore")
-    val lutList = q.as[(Long, Seq[Float])].collect()
-      .map { case (qid, v) => qid -> computeLut(cb, CentroidGemm.toFloatArray(v)) }
-    val luts = lutList.toMap
-    // duplicate query ids would silently collapse to ONE surviving LUT
-    // while the probe still fans out for every vector — all candidates
-    // would score against the wrong query; refuse instead
-    require(luts.size == lutList.length,
-      s"AnnPq.searchADC: duplicate ids in '$queryIdCol' — each query " +
-        "needs a distinct id (its LUT is keyed by it)")
+    // the probe refuses duplicate query ids: they would collapse to ONE
+    // surviving LUT while the probe fans out for every vector
+    val probe = AnnIvf.probeQueries(index, q, nprobe, "AnnPq.searchADC")
+    val probed = probe.pairs.select("query_id", "partition_id", "pscore")
+    val luts = probe.queryRows.map { r =>
+      r.getLong(0) -> computeLut(cb, CentroidGemm.toFloatArray(r.getSeq[Float](1)))
+    }.toMap
     val bc = spark.sparkContext.broadcast(luts)
     val m = cb.m
     val ksub = cb.ksub
@@ -635,7 +631,7 @@ object AnnPq {
             math.max(refine, k), desc("adc_score"), asc(idCol))
           .select(col("query_id"), col(idCol))
         val exact = shortlist
-          .join(broadcast(q), Seq("query_id"))
+          .join(broadcast(probe.queries), Seq("query_id"))
           .join(index.assigned.select(col(idCol), col(vecCol)), Seq(idCol))
           .withColumn("score",
             graft.functions.VectorOps.dot(col(vecCol), col("__query_vec")))

@@ -18,9 +18,10 @@ import org.apache.spark.util.LongAccumulator
   * the least-recently-used partition is unpersisted. Counters are
   * `LongAccumulator`s, so they also surface in the Spark UI.
   *
-  * Cache decisions are driver-side (the probe result is a ≤
-  * |queries|·nprobe driver round-trip in [[AnnIvf.searchPruned]] too —
-  * the reference's "leader search first" sequencing). Concurrency: the
+  * Cache decisions are driver-side: the centroid probe runs on the
+  * driver ([[AnnIvf.probeQueries]], as in [[AnnIvf.searchPruned]] — the
+  * reference's "leader search first" sequencing), so the probed
+  * partition set is known before any plan is built. Concurrency: the
   * cache monitor guards only the LRU map itself; a COLD load (persist +
   * optional eager count job — seconds on a big partition) runs outside
   * it behind a per-partition gate, so a cold query never blocks
@@ -109,9 +110,8 @@ final class ServingCache(val index: AnnIvf.Index, val maxCachedPartitions: Int,
       k: Int, nprobe: Int, idCol: String = "vec_id"): DataFrame = {
     val q = queries.select(
       col(queryIdCol).as("query_id"), col(vecCol).as("__query_vec"))
-    val probed = AnnIvf.probeStep(index, q, nprobe).drop("pscore")
-    val pids = probed.select("partition_id").distinct()
-      .collect().map(_.getAs[Number]("partition_id").intValue()).sorted
+    val probe = AnnIvf.probeQueries(index, q, nprobe, "ServingCache.search")
+    val pids = probe.partitionIds
     if (pids.isEmpty) return AnnIvf.searchPruned(
       index, queries, queryIdCol, vecCol, k, nprobe, idCol)
     // resident-first capacity split — the overflow of a wide probe set
@@ -134,10 +134,10 @@ final class ServingCache(val index: AnnIvf.Index, val maxCachedPartitions: Int,
     // broadcast the SMALL things separately: the (query, partition)
     // pairs and the query vectors ONCE each — not the probe result with
     // a query-vector copy per probed partition (nprobe× the bytes)
-    val pairs = probed.select("query_id", "partition_id")
+    val pairs = probe.pairs.select("query_id", "partition_id")
     Knn.topKPerGroup(
       broadcast(pairs).join(cands, Seq("partition_id"))
-        .join(broadcast(q), Seq("query_id"))
+        .join(broadcast(probe.queries), Seq("query_id"))
         .withColumn("score",
           graft.functions.VectorOps.dot(col(vecCol), col("__query_vec"))),
       Seq(col("query_id")), k, desc("score"), asc(idCol))

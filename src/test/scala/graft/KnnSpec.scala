@@ -293,6 +293,15 @@ class KnnSpec extends SparkSpec {
     }
     assert(costs(0) < costs(1))
     assert(costs(1) === queries.count() * emb.count())
+    // and the probed set is the crossJoin + row_number reference's
+    val q = queries.select($"vec_id".as("query_id"), $"embedding".as("__query_vec"))
+    Seq(1, 3, 8).foreach { np =>
+      assert(AnnIvf.probePartitions(index, queries, "vec_id", "embedding", np)
+          .as[(Long, Int)].collect().toSet ===
+        ProbeSpec.referenceProbe(index, q, np)
+          .select($"query_id", $"partition_id").as[(Long, Int)].collect().toSet,
+        s"nprobe=$np")
+    }
   }
 
   test("range search: exact at nprobe = nlist, probe-pruned subset below") {
