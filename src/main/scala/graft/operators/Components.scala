@@ -47,6 +47,11 @@ object Components {
       .select(greatest(col("a"), col("b")).as("src"), least(col("a"), col("b")).as("dst"))
       .distinct()
 
+  /** Lineage truncation of a round's edges: durable checkpoint files in
+    * `reliable` mode (executor-loss safe), local blocks otherwise. */
+  private def truncate(df: DataFrame, reliable: Boolean): DataFrame =
+    if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
+
   private def symmetrize(edges: DataFrame): DataFrame =
     edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
 
@@ -97,12 +102,15 @@ object Components {
     * pass) and skip the loop entirely. Identical output by construction:
     * both paths label every node with its component's minimum id.
     *
-    * The budget is EDGES, checked after canonicalization with one cheap
-    * count (the loop would pay that job anyway in its first signature):
-    * `localMaxEdges` defaults to 2²⁰ ≈ 16 MB of longs collected — far
-    * under driver headroom, far over any healthy dedup graph at sf0.1.
-    * Above the budget, falls through to [[connectedComponents]] — the
-    * 100 TB path is unchanged and never collects. */
+    * The budget is EDGES after canonicalization, and ONE bounded collect
+    * decides the branch: `limit(localMaxEdges + 1)` brings back at most
+    * budget + 1 rows, and fewer means the whole graph is on the driver.
+    * `localMaxEdges` defaults to 2²⁰ ≈ 16 MB of longs — far under driver
+    * headroom, far over any healthy dedup graph at sf0.1. Above the
+    * budget the bounded sample is dropped, the canonical edge set is
+    * recomputed once into a checkpoint, and [[connectedComponents]]' loop
+    * runs on it — the large-graph path never holds the graph on the
+    * driver. */
   def connectedComponentsAuto(
       pairs: DataFrame,
       leftCol: String,
@@ -112,21 +120,17 @@ object Components {
       reliable: Boolean = false): DataFrame = {
     requireIntegralId(pairs, leftCol, "connectedComponentsAuto")
     requireIntegralId(pairs, rightCol, "connectedComponentsAuto")
+    require(localMaxEdges >= 0L && localMaxEdges < Int.MaxValue,
+      s"localMaxEdges must be in [0, ${Int.MaxValue}) (got $localMaxEdges)")
+    val spark = pairs.sparkSession
+    import spark.implicits._
     val edges = canonical(pairs, leftCol, rightCol)
-      .localCheckpoint(eager = true)
-    if (edges.count() > localMaxEdges)
-      // already canonical AND checkpointed — enter the loop directly
-      // rather than re-paying a full distinct shuffle + a second
-      // materializing checkpoint over the whole edge set (the exact
-      // large-graph case this branch exists to keep cheap)
-      statsFromCanonical(edges, maxIter, reliable).assignment
+    val es = edges.select(col("src"), col("dst")).as[(Long, Long)]
+      .limit(localMaxEdges.toInt + 1).collect()
+    if (es.length > localMaxEdges)
+      // the checkpoint is already canonical — enter the loop directly
+      statsFromCanonical(truncate(edges, reliable), maxIter, reliable).assignment
     else {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val es = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
-      // the edge list now lives on the driver; the checkpoint backing it
-      // is dead (the result below is built from driver rows)
-      releaseCheckpoint(edges)
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -176,10 +180,8 @@ object Components {
       reliable: Boolean = false): CcStats = {
     requireIntegralId(pairs, leftCol, "connectedComponents")
     requireIntegralId(pairs, rightCol, "connectedComponents")
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
     statsFromCanonical(
-      truncate(canonical(pairs, leftCol, rightCol)), maxIter, reliable)
+      truncate(canonical(pairs, leftCol, rightCol), reliable), maxIter, reliable)
   }
 
   /** The star-contraction loop over ALREADY canonical (src > dst,
@@ -193,8 +195,6 @@ object Components {
       edges0: DataFrame,
       maxIter: Int,
       reliable: Boolean): CcStats = {
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
     def signature(e: DataFrame): (Long, Long) = {
       // bit_xor: order-independent AND overflow-free under ANSI mode
       // (sum(hash) trips ARITHMETIC_OVERFLOW)
@@ -212,7 +212,7 @@ object Components {
       // on the 2M-edge ScaleSmoke graph)
       val sym = symmetrize(edges)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val next = truncate(smallStar(largeStarOn(sym)))
+      val next = truncate(smallStar(largeStarOn(sym)), reliable)
       sym.unpersist(blocking = false)
       val nsig = signature(next)
       // Signature equality ((count, bit_xor(xxhash64))) could in principle

@@ -1,10 +1,12 @@
 package graft.operators
 
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
+
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** Link analysis — fixed-point PageRank (Page et al. 1999) over an edge
@@ -32,26 +34,26 @@ import org.apache.spark.storage.StorageLevel
   * wanting stochastic completeness add reverse edges or self-loops
   * upstream (the bipartite query does the former).
   *
-  * The iteration core deliberately runs on partition-preserving RDDs —
-  * the sanctioned "genuine per-partition imperative logic" case, and
-  * the same substrate GraphX/Pregel uses. A DataFrame loop re-plans
-  * joins and re-launches AQE stages every round (~1.3 s/round of pure
-  * driver overhead at sf0.1, and a fresh edge sort-or-broadcast per
-  * round at scale). Here the graph is collapsed ONCE into a hash-
-  * partitioned per-source adjacency list (the Spark-examples PageRank
-  * layout), so each round's rank join is NODE-sized — the edge set is
-  * only ever traversed by the flatMap that emits contributions, and the
-  * round's single shuffle is the node-sized map-side-combined
-  * `reduceByKey`, the information-theoretic minimum for PageRank.
-  * Results are integers, so the output is bit-identical regardless of
-  * partitioning. Web-scale hubs are handled by EDGE-PARTITIONING the
-  * adjacency above a threshold: a source whose out-list exceeds
-  * `hubSplit` is stored as several (src, (totalOutDeg, slice)) records,
-  * so no single record/task ever materializes a mega-hub's full
-  * out-list; every slice computes the identical per-edge contribution
-  * `rank div totalOutDeg` (the total is carried in the record), so the
-  * split is invisible in the output — bit-identical ranks at any
-  * threshold, which LinkAnalysisSpec pins.
+  * The four fixpoints — [[pageRank]], [[hits]], [[kCore]], [[bfsHops]] —
+  * share ONE engine on partition-preserving RDDs (a DataFrame loop
+  * re-plans joins and re-launches AQE stages every round). The graph is
+  * collapsed once into hash-partitioned CSR block records ([[Block]]:
+  * sorted `nodes`, list offsets, neighbor ids), and each round's node
+  * state is a primitive `Array[Long]` aligned to a block's `nodes`,
+  * zipped with it narrowly. A round is one [[scatter]] — every active
+  * node sends a value along its list, summed per task by destination in
+  * a primitive map — and one [[gather]] folding the destination
+  * partition's sums into the next state array; its only shuffle ships
+  * one (keys, sums) array pair per destination partition. No per-node
+  * tuple is boxed, shuffled or persisted: Spark's SizeEstimator walking
+  * such records on every persist was the larger part of these
+  * operators' executor time. A record holds at most [[blockEdges]] list
+  * entries, so a mega-hub's list spans consecutive records instead of
+  * growing one; every copy carries the node's TOTAL degree and sends its
+  * own slice. All recurrences are integer, so the output is
+  * bit-identical under any partitioning or record layout
+  * (LinkAnalysisSpec pins both). Integral ids run as longs; any other id
+  * type is dictionary-encoded once and decoded at output with a join.
   */
 object LinkAnalysis {
 
@@ -62,35 +64,31 @@ object LinkAnalysis {
     * to the cluster's parallelism. Both bounds are load-bearing — tiny
     * graphs must not dissolve into pure task-launch latency (hundreds of
     * near-empty tasks per round), and large graphs cap at the cluster
-    * width anyway. 64 Ki edges/partition ≈ tens of ms of boxed-key work
-    * per task per round, ~10× the task-launch cost, while the previous
-    * 1 M-edge target left a 32-core box running the whole fixed-point
-    * loop on 1-2 partitions (measured: graph_hits wall ≈ its single-task
-    * cpu_sec at sf0.1). Output of every caller is pinned bit-identical
-    * under any partitioning (integer recurrences; LinkAnalysisSpec), so
-    * this is purely a throughput knob. */
+    * width anyway. The previous 1 M-edge target left a 32-core box
+    * running the whole fixed-point loop on 1-2 partitions (measured:
+    * graph_hits wall ≈ its single-task cpu_sec at sf0.1). Output of
+    * every caller is pinned bit-identical under any partitioning
+    * (integer recurrences; LinkAnalysisSpec), so this is purely a
+    * throughput knob. */
   private val EdgesPerPartition = 65536L
-  private def roundPartitionCount(
-      spark: org.apache.spark.sql.SparkSession, m: Long): Int =
+  private def roundPartitionCount(spark: SparkSession, m: Long): Int =
     math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (m / EdgesPerPartition).toInt + 1))
-  private def roundPartitioner(
-      spark: org.apache.spark.sql.SparkSession, m: Long): HashPartitioner =
+  private def roundPartitioner(spark: SparkSession, m: Long): HashPartitioner =
     new HashPartitioner(roundPartitionCount(spark, m))
 
   /** RDD partitioner replicating a DataFrame `repartition(n, col)` hash
     * layout for a LONG key — `pmod(murmur3_hash(key, seed=42), n)`, the
     * exact `HashPartitioning.partitionIdExpression` Spark plans for that
-    * exchange. Lets an RDD rebuilt from the exchange's output be
-    * CO-PARTITIONED with every later `reduceByKey(part)` in the loop
-    * without a second shuffle (spec-pinned against spark_partition_id
-    * in LinkAnalysisSpec). */
+    * exchange. Routes each round's messages to the partition whose
+    * blocks the exchange placed their destination in (spec-pinned
+    * against spark_partition_id in LinkAnalysisSpec). */
   private[graft] final class DfLongHashPartitioner(n: Int)
       extends org.apache.spark.Partitioner {
     override def numPartitions: Int = n
-    override def getPartition(key: Any): Int = {
-      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32
-        .hashLong(key.asInstanceOf[Long], 42)
+    override def getPartition(key: Any): Int = of(key.asInstanceOf[Long])
+    def of(key: Long): Int = {
+      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(key, 42)
       val m = h % n
       if (m < 0) m + n else m
     }
@@ -101,75 +99,335 @@ object LinkAnalysis {
     override def hashCode: Int = n
   }
 
-  /** Zero-copy narrow view that ATTACHES partitioner metadata to an RDD
-    * whose physical layout already is `p` (rebuilt from a DataFrame
-    * exchange with the matching hash) — so downstream `reduceByKey(p)`
-    * over it stays shuffle-free. */
-  private final class KeyedView[K, V](parent: RDD[(K, V)],
-      p: org.apache.spark.Partitioner)(implicit
-      kt: scala.reflect.ClassTag[K], vt: scala.reflect.ClassTag[V])
-      extends RDD[(K, V)](parent) {
-    override val partitioner: Option[org.apache.spark.Partitioner] = Some(p)
-    override protected def getPartitions: Array[org.apache.spark.Partition] =
-      firstParent[(K, V)].partitions
-    override def compute(split: org.apache.spark.Partition,
-        context: org.apache.spark.TaskContext): Iterator[(K, V)] =
-      firstParent[(K, V)].iterator(split, context)
+  /** List entries one [[Block]] record holds at most, so no record grows
+    * with its partition. Dynamic only so a spec can push a hub across
+    * records on a small graph. */
+  private[graft] val blockEdges = new scala.util.DynamicVariable[Int](1 << 16)
+
+  /** Entries a task's message map holds before it ships them early. */
+  private val CombineCap = 1 << 20
+
+  /** One CSR record of a partition's adjacency: `nodes` ascend; node j's
+    * list is `out(off(j) until off(j + 1))` (in-lists likewise, null
+    * unless built) and `deg(j)` is its TOTAL out-degree. A node whose
+    * lists overflow the record continues as the next record's first node
+    * (`cont`) — the only position where a node ever repeats. */
+  private final case class Block(nodes: Array[Long], deg: Array[Int],
+      off: Array[Int], out: Array[Long], inOff: Array[Int], in: Array[Long],
+      cont: Boolean)
+
+  /** A graph in block layout; `blocks` is persisted, placed by node
+    * through `part`'s hash. */
+  private final class Graph(val blocks: RDD[Block],
+      val part: DfLongHashPartitioner)
+
+  /** Open-addressing long → long sum map (linear probing, no boxing):
+    * the per-task message combiner of [[scatter]] and the receive side
+    * of [[gather]]. */
+  private final class LongSums {
+    private var keys = new Array[Long](64)
+    private var sums = new Array[Long](64)
+    private var used = new Array[Boolean](64)
+    var size = 0
+    private def slot(k: Long): Int = {
+      val mask = keys.length - 1
+      var i = java.lang.Long.hashCode(k * 0x9E3779B97F4A7C15L) & mask
+      while (used(i) && keys(i) != k) i = (i + 1) & mask
+      i
+    }
+    def add(k: Long, v: Long): Unit = {
+      val i = slot(k)
+      if (used(i)) sums(i) += v
+      else {
+        used(i) = true; keys(i) = k; sums(i) = v; size += 1
+        if (size * 2 > keys.length) rehash(keys.length * 2)
+      }
+    }
+    def get(k: Long): Long = { val i = slot(k); if (used(i)) sums(i) else 0L }
+    private def reset(cap: Int): Unit = {
+      keys = new Array[Long](cap); sums = new Array[Long](cap)
+      used = new Array[Boolean](cap); size = 0
+    }
+    private def rehash(cap: Int): Unit = {
+      val (ks, vs, us) = (keys, sums, used)
+      reset(cap)
+      var i = 0
+      while (i < ks.length) { if (us(i)) add(ks(i), vs(i)); i += 1 }
+    }
+    /** Moves the entries out as one (destination partition, keys, sums)
+      * batch per non-empty destination. */
+    def drain(part: DfLongHashPartitioner)
+        : Seq[(Int, (Array[Long], Array[Long]))] = {
+      val pid = new Array[Int](keys.length)
+      val cnt = new Array[Int](part.numPartitions)
+      for (i <- keys.indices) if (used(i)) { pid(i) = part.of(keys(i)); cnt(pid(i)) += 1 }
+      val batches = cnt.map(c => (new Array[Long](c), new Array[Long](c)))
+      val fill = new Array[Int](cnt.length)
+      for (i <- keys.indices) if (used(i)) {
+        val (p, (ks, vs)) = (pid(i), batches(pid(i)))
+        ks(fill(p)) = keys(i); vs(fill(p)) = sums(i); fill(p) += 1
+      }
+      reset(64)
+      cnt.indices.filter(cnt(_) > 0).map(p => (p, batches(p)))
+    }
   }
 
-  /** Canonical undirected LONG edge frame (u, v) → hash-partitioned,
-    * hub-sliced PRIMITIVE adjacency: (node, Array[Long] neighbors), plus
-    * |sym| = 2·E and the shared round partitioner. The frame is read
-    * through `queryExecution.toRdd` (primitive `getLong`, no external
-    * Row decode — the Row path measured ~7 µs/edge of pure boxing) and
-    * the per-node lists grow in `ArrayBuilder.ofLong` (primitive
-    * backing array, no element boxing). Returns (null, 0, null) for an
-    * empty graph. Caller owns unpersisting `adj`. */
-  private def buildAdjLong(eDist: DataFrame, hubSplit: Int)
-      : (RDD[(Long, Array[Long])], Long, org.apache.spark.Partitioner) = {
-    val spark = eDist.sparkSession
-    val m2 = eDist.count() * 2
-    if (m2 == 0L) return (null, 0L, null)
-    val nParts = roundPartitionCount(spark, m2)
-    val part = new DfLongHashPartitioner(nParts)
-    // symmetrize + place THROUGH A DATAFRAME EXCHANGE (Tungsten rows,
-    // whole-stage codegen, no per-record Kryo): r18's aggregateByKey
-    // Kryo-(de)serialized an ArrayBuilder combiner per key on both
-    // shuffle sides — tools/Profile measured that build at 7.3 of
-    // graph_bfs' 19 cpu-s; an RDD partitionBy of the raw pairs paid
-    // ~6 µs/record in Kryo stream overhead instead. The DF exchange
-    // ships compact UnsafeRows, and the grouped primitive adjacency is
-    // read straight off it (InternalRow getLong — no Row decode). The
-    // murmur3-matched `part` (above) keeps the result co-partitioned
-    // with every later reduceByKey(part) — no second shuffle.
-    // (A columnar persist of eDist to avoid its double execution was
-    // measured SLOWER than the re-execution — cache build+read 4.2 cpu-s
-    // vs 1.6 for the second scan+distinct — so the count executes the
-    // plan once and the union below executes it again, deliberately.)
-    val c0 = eDist.columns(0)
-    val c1 = eDist.columns(1)
-    val symDf = eDist.select(col(c0).as("n"), col(c1).as("d"))
-      .union(eDist.select(col(c1).as("n"), col(c0).as("d")))
+  /** Runs `body` with its Spark jobs described as `label` (what the UI
+    * and listeners show per job), restoring the caller's description. */
+  private def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** How result ids map back to the caller's: integral ids run as longs
+    * and are cast back to `nodeType`; any other type is encoded through
+    * `dict` (node, id) — checkpointed once, so ids stay stable — and
+    * decoded with a join. */
+  private final case class Ids(nodeType: DataType, dict: DataFrame) {
+    /** The ids of those `values` that name a node. */
+    def resolve(values: Seq[Any]): Map[Any, Long] =
+      if (values.isEmpty) Map.empty
+      else if (dict == null) values.collect {
+        case x @ (_: java.lang.Byte | _: java.lang.Short | _: Integer |
+            _: java.lang.Long) => x -> x.asInstanceOf[Number].longValue
+      }.toMap
+      else {
+        // try_cast: a value of another type names no node (never a throw)
+        val found = dict.filter(col("node").isin(values.map(lit(_).try_cast(nodeType)): _*))
+          .collect().map(r => r.get(0) -> r.getLong(1)).toMap
+        values.flatMap(v => found.get(v).map(v -> _)).toMap
+      }
+    def schema(fields: Seq[StructField]): StructType =
+      StructType(StructField("node", nodeType, nullable = false) +: fields)
+    def release(): Unit = if (dict != null) releaseCheckpoint(dict)
+    /** The result of a graph with no edges; releases the dictionary. */
+    def empty(spark: SparkSession, fields: Seq[StructField]): DataFrame = {
+      release()
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema(fields))
+    }
+  }
+
+  /** The caller's edges as non-null LONG pairs (a, b), and their [[Ids]]. */
+  private def encode(edges: DataFrame, a: String, b: String): (DataFrame, Ids) = {
+    val t = edges.schema(a).dataType
+    require(edges.schema(b).dataType == t,
+      s"endpoint type mismatch: $t vs ${edges.schema(b).dataType}")
+    val e = edges.select(col(a).as("a"), col(b).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+    t match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        (e.select(col("a").cast(LongType).as("a"), col("b").cast(LongType).as("b")),
+          Ids(t, null))
+      case _ =>
+        val dict = e.select(col("a").as("node")).union(e.select(col("b").as("node")))
+          .distinct().withColumn("id", monotonically_increasing_id())
+          .localCheckpoint(eager = true)
+        def id(c: String) = dict.select(col("node").as(c), col("id").as("i" + c))
+        (e.join(id("a"), "a").join(id("b"), "b").select(col("ia").as("a"), col("ib").as("b")),
+          Ids(t, dict))
+    }
+  }
+
+  /** The one adjacency construction, over encoded edges (a, b). Directed:
+    * out-lists, in-lists only `withIn`, and every endpoint is a node;
+    * undirected: self-loops dropped, both orientations out-lists.
+    * Placement is ONE DataFrame exchange of the raw entries — compact
+    * UnsafeRows, no per-record Kryo (the RDD shuffle and boxed per-key
+    * combiners it replaced measured 5–7 cpu-s of the sf0.1 graph
+    * queries) — whose murmur3 layout [[DfLongHashPartitioner]] replays
+    * for the rounds' messages. Duplicate and (undirected) reversed edges
+    * land in one partition, so [[toBlocks]] drops them there: no
+    * edge-set distinct shuffle. The width is sized from the raw edge
+    * count, equal to the distinct count on duplicate-free input. Returns
+    * null for an empty graph; the caller unpersists `blocks`. */
+  private def buildGraph(edges: DataFrame, directed: Boolean, withIn: Boolean): Graph = {
+    val e = if (directed) edges else edges.filter(col("a") =!= col("b"))
+    // a row count of the plan's own RDD: one job, no aggregate to plan
+    val m = e.queryExecution.toRdd.count() * (if (directed) 1 else 2)
+    if (m == 0L) return null
+    val nParts = roundPartitionCount(e.sparkSession, m)
+    val budget = blockEdges.value
+    require(budget >= 1, s"blockEdges must be >= 1 (got $budget)")
+    val entries = e.select(col("a").as("n"), col("b").as("p"), lit(true).as("o"))
+      .union(e.select(col("b").as("n"), col("a").as("p"), lit(!directed).as("o")))
       .repartition(nParts, col("n"))
-    val adj: RDD[(Long, Array[Long])] = new KeyedView(
-      symDf.queryExecution.toRdd.mapPartitions { rows =>
-        val m = new scala.collection.mutable.LongMap[
-          scala.collection.mutable.ArrayBuilder.ofLong]()
-        rows.foreach { r =>
-          m.getOrElseUpdate(r.getLong(0),
-            new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
+    val blocks = entries.queryExecution.toRdd.mapPartitions { rows =>
+      val (ns, ps, os) =
+        (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong, new ArrayBuilder.ofBoolean)
+      rows.foreach { r => ns += r.getLong(0); ps += r.getLong(1); os += r.getBoolean(2) }
+      toBlocks(ns.result(), ps.result(), os.result(), withIn, budget)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    new Graph(blocks, new DfLongHashPartitioner(nParts))
+  }
+
+  /** One partition's (node, partner, isOut) entries → one CSR over its
+    * sorted distinct nodes (counting sort, primitive arrays only) with
+    * each list sorted and deduplicated, cut into records of at most
+    * `budget` out + in entries. */
+  private def toBlocks(n: Array[Long], p: Array[Long], o: Array[Boolean],
+      withIn: Boolean, budget: Int): Iterator[Block] = {
+    val sorted = n.clone()
+    java.util.Arrays.sort(sorted)
+    var v = 0
+    for (x <- sorted) if (v == 0 || sorted(v - 1) != x) { sorted(v) = x; v += 1 }
+    val nodes = java.util.Arrays.copyOf(sorted, v)
+    val (outOff, inOff) = (new Array[Int](nodes.length + 1), new Array[Int](nodes.length + 1))
+    val at = n.map(java.util.Arrays.binarySearch(nodes, _))
+    for (e <- n.indices) if (o(e)) outOff(at(e) + 1) += 1 else inOff(at(e) + 1) += 1
+    for (i <- nodes.indices) { outOff(i + 1) += outOff(i); inOff(i + 1) += inOff(i) }
+    val out = new Array[Long](outOff.last)
+    val in = new Array[Long](if (withIn) inOff.last else 0)
+    val (oc, ic) = (outOff.clone(), inOff.clone())
+    for (e <- n.indices) {
+      val i = at(e)
+      if (o(e)) { out(oc(i)) = p(e); oc(i) += 1 }
+      else if (withIn) { in(ic(i)) = p(e); ic(i) += 1 }
+    }
+    // sort each list and compact its repeats away, in place
+    def dedup(off: Array[Int], xs: Array[Long]): Array[Long] = {
+      var w = 0
+      for (i <- nodes.indices) {
+        val (from, to) = (off(i), off(i + 1))
+        java.util.Arrays.sort(xs, from, to)
+        off(i) = w
+        for (k <- from until to) if (k == from || xs(k) != xs(k - 1)) { xs(w) = xs(k); w += 1 }
+      }
+      off(nodes.length) = w
+      java.util.Arrays.copyOf(xs, w)
+    }
+    val outs = dedup(outOff, out)
+    val ins = if (withIn) dedup(inOff, in) else in
+    val recs = ArrayBuffer.empty[Block]
+    val (rn, rd, rv, rw) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofInt,
+      new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
+    val (ro, ri) = (new ArrayBuilder.ofInt, new ArrayBuilder.ofInt)
+    var cont = false
+    def flush(): Unit = {
+      ro += rv.length; ri += rw.length
+      recs += Block(rn.result(), rd.result(), ro.result(), rv.result(),
+        if (withIn) ri.result() else null, if (withIn) rw.result() else null, cont)
+      Seq(rn, rd, rv, rw, ro, ri).foreach(_.clear())
+    }
+    for (i <- nodes.indices) {
+      var (a, b) = (outOff(i), if (withIn) inOff(i) else 0)
+      val bEnd = if (withIn) inOff(i + 1) else 0
+      var first = true
+      while (first || a < outOff(i + 1) || b < bEnd) {
+        if (rv.length + rw.length == budget) { flush(); cont = !first }
+        rn += nodes(i); rd += outOff(i + 1) - outOff(i); ro += rv.length; ri += rw.length
+        val ta = math.min(outOff(i + 1) - a, budget - rv.length - rw.length)
+        rv.addAll(outs, a, ta); a += ta
+        val tb = math.min(bEnd - b, budget - rv.length - rw.length)
+        rw.addAll(ins, b, tb); b += tb
+        first = false
+      }
+    }
+    if (rn.length > 0) flush()
+    recs.iterator
+  }
+
+  /** A node's outgoing message value for one round, from its block and
+    * the state aligned to it (null before the first round); 0 sends
+    * nothing. */
+  private trait NodeValue extends Serializable {
+    def apply(b: Block, state: Array[Long], j: Int): Long
+  }
+
+  /** One round's messages: every node with a non-zero `value` sends it to
+    * each entry of its out-list (in-list if `in`). Sums combine per task
+    * by destination in a [[LongSums]] and ship as one array batch per
+    * destination partition, keyed by its id (which a HashPartitioner
+    * maps to itself). */
+  private def scatter(g: Graph, state: RDD[Array[Long]], in: Boolean)(
+      value: NodeValue): RDD[(Int, (Array[Long], Array[Long]))] = {
+    val part = g.part
+    def send(it: Iterator[(Block, Array[Long])]) = {
+      val sums = new LongSums
+      val batches = ArrayBuffer.empty[(Int, (Array[Long], Array[Long]))]
+      it.foreach { case (b, s) =>
+        val (off, to) = if (in) (b.inOff, b.in) else (b.off, b.out)
+        var j = 0
+        while (j < b.nodes.length) {
+          val x = value(b, s, j)
+          var k = if (x != 0L) off(j) else off(j + 1)
+          while (k < off(j + 1)) { sums.add(to(k), x); k += 1 }
+          j += 1
         }
-        m.iterator.flatMap { case (s, b) =>
-          val arr = b.result()
-          if (arr.length <= hubSplit) Iterator.single((s, arr))
-          else arr.grouped(hubSplit).map(g => (s, g))
-        }
-      }, part).persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()
-    (adj, m2, part)
+        if (sums.size > CombineCap) batches ++= sums.drain(part)
+      }
+      (batches ++= sums.drain(part)).iterator
+    }
+    (if (state == null) g.blocks.mapPartitions(bs => send(bs.map((_, null))))
+      else g.blocks.zipPartitions(state)((bs, ss) => send(bs.zip(ss))))
+      .partitionBy(new HashPartitioner(part.numPartitions))
+  }
+
+  /** The receive side of [[scatter]]: node j's next state is
+    * `f(prev(j), summed messages to it)`, each 0 when absent. */
+  private def gather(g: Graph, prev: RDD[Array[Long]],
+      msgs: RDD[(Int, (Array[Long], Array[Long]))])(
+      f: (Long, Long) => Long): RDD[Array[Long]] = {
+    def recv(bs: Iterator[(Block, Array[Long])],
+        ms: Iterator[(Int, (Array[Long], Array[Long]))]) = {
+      val sums = new LongSums
+      ms.foreach { case (_, (ks, vs)) =>
+        var i = 0
+        while (i < ks.length) { sums.add(ks(i), vs(i)); i += 1 }
+      }
+      bs.map { case (b, s) =>
+        Array.tabulate(b.nodes.length)(j =>
+          f(if (s == null) 0L else s(j), sums.get(b.nodes(j))))
+      }
+    }
+    if (prev == null) g.blocks.zipPartitions(msgs)((bs, ms) => recv(bs.map((_, null)), ms))
+    else g.blocks.zipPartitions(prev, msgs)((bs, ss, ms) => recv(bs.zip(ss), ms))
+  }
+
+  /** Count of nodes whose state passes `p` (a spanning node counts once
+    * per record — callers test only for zero). */
+  private def countWhere(state: RDD[Array[Long]])(p: Long => Boolean): Long =
+    state.map(_.count(p).toLong).fold(0L)(_ + _)
+
+  /** One Row per node, from its id and the aligned `states`; a spanning
+    * node's repeat copies are skipped, and `row` returns null to drop a
+    * node. */
+  private def nodeRows(g: Graph, states: RDD[Array[Long]]*)(
+      row: (Long, Int, Seq[Array[Long]]) => Row): RDD[Row] =
+    states.foldLeft(g.blocks.map(b => (b, Vector.empty[Array[Long]]))) {
+      (acc, s) => acc.zip(s).map { case ((b, v), a) => (b, v :+ a) }
+    }.flatMap { case (b, v) =>
+      (if (b.cont) 1 else 0).until(b.nodes.length).iterator
+        .map(j => row(b.nodes(j), j, v)).filter(_ != null)
+    }
+
+  /** The operator's result from (long id, values…) rows: decoded back to
+    * the caller's ids and materialized, so the caller can drop its
+    * blocks and states right after. */
+  private def output(spark: SparkSession, rows: RDD[Row], ids: Ids,
+      fields: Seq[StructField]): DataFrame = {
+    val byId = spark.createDataFrame(rows,
+      StructType(StructField("node", LongType, nullable = false) +: fields))
+    val values = fields.map(f => col(f.name))
+    val out =
+      if (ids.nodeType == LongType) byId
+      else if (ids.dict == null)
+        byId.select(col("node").cast(ids.nodeType).as("node") +: values: _*)
+      else spark.createDataFrame(
+        byId.join(ids.dict.select(col("id").as("node"), col("node").as("__n")), "node")
+          .select(col("__n") +: values: _*).rdd, ids.schema(fields))
+    out.localCheckpoint(eager = true)
   }
 
   /** Fixed-point PageRank.
+    *
+    * Spark shape: one block build (out-lists plus every endpoint as a
+    * node), one pass counting nodes and checking the seeds, then the
+    * rounds inside the single output job — rank is a pure function of
+    * the in-sum (pr = teleport + d·s div 100), so each round is one
+    * scatter of `pr div outdeg` and one gather of the in-sums, with no
+    * persist and no action in between.
     *
     * @param edges   directed edge list; duplicates are collapsed; src
     *                and dst must share one data type
@@ -177,14 +435,6 @@ object LinkAnalysis {
     * @param dstCol  destination-node column
     * @param iterations fixed iteration count (deterministic output)
     * @param d100    damping factor in percent (85 ⇒ d = 0.85)
-    * @param assumeDistinct caller guarantees the edge list is already
-    *                duplicate-free (e.g. built from a `distinct()` pair
-    *                set fanned out over disjoint prefixes) — skips the
-    *                internal edge-set shuffle
-    * @param hubSplit out-degree above which a source's adjacency is
-    *                edge-partitioned into slices of this size (the
-    *                mega-hub layout); output is bit-identical at any
-    *                value ≥ 1
     * @param teleportSeeds when non-empty, PERSONALIZED PageRank (random
     *                walk with restart): the teleport mass and the
     *                initial distribution concentrate uniformly on these
@@ -192,8 +442,9 @@ object LinkAnalysis {
     *                proximity-to-the-seed-set, the classic
     *                recommendation / related-items primitive
     *                (Jeh & Widom 2003 "Scaling personalized web search").
-    *                Seeds must be nodes of the graph (an absent seed
-    *                strands its share of the restart mass). Passing
+    *                Every seed must be a node of the graph — an absent
+    *                one fails the call, naming it, instead of silently
+    *                stranding its share of the restart mass. Passing
     *                EVERY node is bit-identical to the empty default.
     * @return (node, pr) — pr is the fixed-point rank in units of
     *         1e-12; divide by `Scale.toDouble` for the float view
@@ -204,147 +455,53 @@ object LinkAnalysis {
       dstCol: String,
       iterations: Int = 5,
       d100: Int = 85,
-      assumeDistinct: Boolean = false,
-      hubSplit: Int = 100000,
       teleportSeeds: Seq[Any] = Nil): DataFrame = {
-    require(iterations >= 0 && d100 >= 0 && d100 <= 100 && hubSplit >= 1)
+    require(iterations >= 0 && d100 >= 0 && d100 <= 100)
     val spark = edges.sparkSession
-    val nodeType = edges.schema(srcCol).dataType
-    require(edges.schema(dstCol).dataType == nodeType,
-      s"src/dst type mismatch: $nodeType vs ${edges.schema(dstCol).dataType}")
-
-    // null endpoints filtered like every sibling operator: an unfiltered
-    // null would become a graph NODE and then a null value under the
-    // nullable=false output schema — a false non-null contract Catalyst
-    // is allowed to optimize against
-    val eDist = edges.select(col(srcCol), col(dstCol))
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-    val e: RDD[(Any, Any)] = (if (assumeDistinct) eDist else eDist.distinct())
-      .rdd.map(r => (r.get(0), r.get(1)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // size the round partitioner to the GRAPH, not the cluster default:
-    // a round is a handful of narrow stages, and over-partitioning tiny
-    // graphs turns each into pure task-launch latency, while huge graphs
-    // get one partition per ~250k edges up to the cluster's parallelism —
-    // the same fit-the-partition-to-the-data rule the sinks use
-    val m = e.count()
-    // empty graph: n = 0 would divide the teleport mass by zero below —
-    // the honest answer is an empty rank table, not an ArithmeticException
-    if (m == 0) {
-      e.unpersist(blocking = false)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("node", nodeType, nullable = false),
-          StructField("pr", LongType, nullable = false))))
+    val (e, ids) = encode(edges, srcCol, dstCol)
+    val fields = Seq(StructField("pr", LongType, nullable = false))
+    val g = labelled(spark, "pagerank build")(
+      buildGraph(e, directed = true, withIn = false))
+    if (g == null) return ids.empty(spark, fields)
+    // distinct BEFORE sizing: counting duplicate seeds would dilute every
+    // seed's teleport mass (total rank mass < Scale)
+    val wanted = teleportSeeds.distinct
+    val resolved = ids.resolve(wanted)
+    val probe = resolved.values.toArray.sorted
+    val counted = labelled(spark, "pagerank nodes")(g.blocks.map { b =>
+      (b.nodes.length - (if (b.cont) 1L else 0L),
+        b.nodes.filter(java.util.Arrays.binarySearch(probe, _) >= 0))
+    }.collect())
+    val found = counted.flatMap(_._2).toSet
+    val missing = wanted.filterNot(s => resolved.get(s).exists(found))
+    if (missing.nonEmpty) {
+      g.blocks.unpersist(blocking = false); ids.release()
+      throw new IllegalArgumentException(
+        s"pageRank: teleportSeeds not in the graph: ${missing.mkString(", ")}")
     }
-    val part = roundPartitioner(spark, m)
-
-    // collapse to per-source adjacency ONCE; every later round joins
-    // rank against NODE-sized tables only, and the edge set is traversed
-    // solely by the contribution flatMap. Sources above `hubSplit`
-    // out-degree are edge-partitioned into slices that each carry the
-    // TOTAL out-degree, so the per-edge contribution is computed
-    // identically from any slice (keys are unchanged, so the hash
-    // partitioning is preserved through the slicing).
-    // Honest bound: the slices cap each ROUND's per-record size, but the
-    // one-time aggregateByKey build still merges a hub's whole out-list
-    // in one combiner before slicing (and all slices of one key land in
-    // one hash partition) — ~1 GB of boxed refs per 10^8-degree hub in
-    // that task. Splitting the BUILD too needs salted keys plus a
-    // total-degree join; do it if a corpus with 10^8-degree hubs ever
-    // actually shows up
-    // flat hash shuffle + one single-pass per-partition group (see
-    // buildAdjLong): the aggregateByKey combiner form Kryo-serialized an
-    // ArrayBuffer per key both ways — tools/Profile measured its reduce
-    // side at 5.0 of graph_pagerank's 10.2 cpu-s at sf0.1
-    val adj: RDD[(Any, (Int, Array[Any]))] = e.partitionBy(part)
-      .mapPartitions({ it =>
-        val m = new java.util.HashMap[
-          Any, scala.collection.mutable.ArrayBuffer[Any]]()
-        it.foreach { case (s, d) =>
-          var b = m.get(s)
-          if (b == null) {
-            b = scala.collection.mutable.ArrayBuffer.empty[Any]; m.put(s, b)
-          }
-          b += d
-        }
-        import scala.jdk.CollectionConverters._
-        m.entrySet().iterator().asScala.flatMap { en =>
-          val s = en.getKey; val buf = en.getValue
-          val n = buf.length
-          if (n <= hubSplit) Iterator.single((s, (n, buf.toArray)))
-          else buf.grouped(hubSplit).map(g => (s, (n, g.toArray)))
-        }
-      }, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.flatMap { case (s, d) => Iterator((s, ()), (d, ())) }
-      .reduceByKey(part, (a, _) => a) // distinct, landing directly on `part`
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    adj.count()
-    e.unpersist(blocking = false)
-    // personalized: restart mass and init concentrate on the seed set;
-    // the uniform default is the seeds-= everything special case
-    val personalized = teleportSeeds.nonEmpty
-    // distinct BEFORE sizing: nRestart counting duplicate seeds while the
-    // membership set dedups them would silently dilute every seed's
-    // teleport mass (total rank mass < Scale)
-    val seedsDistinct = teleportSeeds.distinct
-    val nRestart = if (personalized) seedsDistinct.size.toLong else n
-    val bcSeeds = spark.sparkContext.broadcast(seedsDistinct.toSet)
+    val personalized = wanted.nonEmpty
+    val nRestart = if (personalized) wanted.size.toLong else counted.map(_._1).sum
     val teleport = (100L - d100) * Scale / (100L * nRestart)
-
-    // rank is a pure function of the in-sum (pr = teleport + d·s div 100,
-    // s = 0 when absent), so the loop carries the NODE-sized in-sum and
-    // folds the rank update into the next round's adjacency join — ONE
-    // narrow cogroup + one node-sized shuffle per round. Round 1 needs
-    // no join at all: every rank is the uniform init.
     val init = Scale / nRestart
-    def isSeed(node: Any): Boolean = !personalized || bcSeeds.value.contains(node)
-    def rankOf(node: Any, s: Option[Long]): Long =
-      (if (isSeed(node)) teleport else 0L) + d100 * s.getOrElse(0L) / 100
-    var insum: RDD[(Any, Long)] =
-      if (iterations == 0) null
-      else adj.flatMap { case (src, (deg, dsts)) =>
-        if (isSeed(src)) {
-          val c = init / deg
-          dsts.iterator.map(d => (d, c))
-        } else Iterator.empty // init 0 off-seed: nothing to contribute
-      }.reduceByKey(part, _ + _)
-    for (_ <- 2 to iterations) {
-      // the round's rank attach is a narrow co-partitioned zipPartitions
-      // probe: the NODE-sized in-sum builds a small hash map and the
-      // persisted adjacency streams past it (the cogroup join form
-      // hash-built the whole adjacency every round — measured ~2 cpu-s
-      // a round at bench scale for pure rebuild). The output re-keys to
-      // the destination, so the reduceByKey keeps its (node-sized,
-      // map-side combined) shuffle — the round's ONLY one; contribution
-      // order never matters (integer adds); a hub's slices each probe
-      // the same rank record and emit the same `rank div totalDeg`.
-      insum = adj.zipPartitions(insum) { (aIt, sIt) =>
-        val sm = new java.util.HashMap[Any, java.lang.Long]()
-        sIt.foreach { case (nd, s) => sm.put(nd, s) }
-        aIt.flatMap { case (src, (deg, dsts)) =>
-          val sv = sm.get(src)
-          val c = rankOf(src,
-            if (sv == null) None else Some(sv.longValue())) / deg
-          dsts.iterator.map(d => (d, c))
-        }
-      }.reduceByKey(part, _ + _)
+    def isSeed(x: Long): Boolean =
+      !personalized || java.util.Arrays.binarySearch(probe, x) >= 0
+    def rank(x: Long, insum: Long): Long =
+      (if (isSeed(x)) teleport else 0L) + d100 * insum / 100
+    var insum: RDD[Array[Long]] = null
+    for (_ <- 1 to iterations)
+      insum = gather(g, null, scatter(g, insum, in = false) { (b, s, j) =>
+        val x = b.nodes(j)
+        if (b.deg(j) == 0) 0L
+        else if (s == null) (if (isSeed(x)) init else 0L) / b.deg(j)
+        else rank(x, s(j)) / b.deg(j)
+      })((_, in) => in)
+    val rows = nodeRows(g, Option(insum).toSeq: _*) { (x, j, s) =>
+      Row(x, if (s.isEmpty) (if (isSeed(x)) init else 0L) else rank(x, s.head(j)))
     }
-    val pr: RDD[(Any, Long)] =
-      if (insum == null)
-        nodes.map { case (node, _) => (node, if (isSeed(node)) init else 0L) }
-      else nodes.leftOuterJoin(insum, part)
-        .map { case (node, (_, s)) => (node, rankOf(node, s)) }
-
-    val rows = pr.map { case (node, p) => Row(node, p) }
-    val out = spark.createDataFrame(rows,
-        StructType(Seq(StructField("node", nodeType, nullable = false),
-          StructField("pr", LongType, nullable = false))))
-      .localCheckpoint(eager = true)
-    adj.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
+    val out = labelled(spark, s"pagerank r1-$iterations: rank")(
+      output(spark, rows, ids, fields))
+    g.blocks.unpersist(blocking = false)
+    ids.release()
     out
   }
 
@@ -370,12 +527,12 @@ object LinkAnalysis {
     *   hraw(u) = Σ_{u→v} auth(v); hub(u)  = hraw(u)·Scale div max hraw
     * Nodes with no in-edges have auth 0; no out-edges ⇒ hub 0.
     *
-    * Spark shape: forward AND reverse adjacency built once on one
-    * partitioner; each half-round is a node-sized narrow join + the
-    * node-sized map-side-combined `reduceByKey` — identical plan
-    * economics to [[pageRank]], plus one scalar `max` action per
-    * half-round on a persisted node-sized RDD (the per-round driver
-    * roundtrip every normalized iterative method pays).
+    * Spark shape: blocks carry both out- and in-lists; each half-round
+    * is one scatter (hubs along out-lists, authorities back along
+    * in-lists, each normalized on the fly by the previous half's max)
+    * and one gather into a persisted raw-score array, whose max is the
+    * half-round's one action — the driver roundtrip every normalized
+    * iterative method pays. An empty edge set gives an empty table.
     *
     * @return (node, auth, hub) — fixed-point scores in units of
     *         1/[[ScaleHits]]
@@ -384,131 +541,187 @@ object LinkAnalysis {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      iterations: Int = 3,
-      assumeDistinct: Boolean = false): DataFrame = {
+      iterations: Int = 3): DataFrame = {
     require(iterations >= 1)
     val spark = edges.sparkSession
-    val nodeType = edges.schema(srcCol).dataType
-    require(edges.schema(dstCol).dataType == nodeType,
-      s"src/dst type mismatch: $nodeType vs ${edges.schema(dstCol).dataType}")
-
-    val eDist = edges.select(col(srcCol), col(dstCol))
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-    // ONE execution of the edge plan (columnar cache serves the sizing
-    // count and the build — without it an assumeDistinct=false caller
-    // would pay its distinct exchange twice, the buildAdjLong lesson)
-    val eFrame = (if (assumeDistinct) eDist else eDist.distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val m = eFrame.count()
-    require(m > 0, "HITS needs at least one edge")
-    val e: RDD[(Any, Any)] = eFrame.rdd.map(r => (r.get(0), r.get(1)))
-    val part = roundPartitioner(spark, m)
-
-    // ONE grouping pass builds out-lists, in-lists, AND the node set
-    // (the pre-r18 shape paid three edge-sized shuffles and pinned
-    // three RDDs: fwd, rev, and a distinct-endpoints reduce). `both` has
-    // exactly one record per endpoint, so its KEYS are the node set;
-    // fwd/rev are narrow partition-preserving views over the one
-    // persisted RDD. Grouping is a flat hash shuffle + one per-partition
-    // pass (see buildAdjLong) — the r18 aggregateByKey combiner form
-    // Kryo-serialized a pair-of-ArrayBuffers per key both ways, measured
-    // (tools/Profile) at 3.0 of graph_hits' 5.9 cpu-s at sf0.1.
-    val both: RDD[(Any, (Array[Any], Array[Any]))] = e
-      .flatMap { case (s, d) => Iterator((s, (d, true)), (d, (s, false))) }
-      .partitionBy(part)
-      .mapPartitions({ it =>
-        val m = new java.util.HashMap[Any,
-          (scala.collection.mutable.ArrayBuffer[Any],
-            scala.collection.mutable.ArrayBuffer[Any])]()
-        it.foreach { case (n, (p, isOut)) =>
-          var b = m.get(n)
-          if (b == null) {
-            b = (scala.collection.mutable.ArrayBuffer.empty[Any],
-              scala.collection.mutable.ArrayBuffer.empty[Any])
-            m.put(n, b)
-          }
-          if (isOut) b._1 += p else b._2 += p
-        }
-        import scala.jdk.CollectionConverters._
-        m.entrySet().iterator().asScala.map { en =>
-          (en.getKey, (en.getValue._1.toArray, en.getValue._2.toArray))
-        }
-      }, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    both.count()
-    eFrame.unpersist(blocking = false)
-    val fwd = both.mapPartitions(                           // u -> out(u)
-      _.collect { case (n, (o, _)) if o.nonEmpty => (n, o) },
-      preservesPartitioning = true)
-    val rev = both.mapPartitions(                           // v -> in(v)
-      _.collect { case (n, (_, i)) if i.nonEmpty => (n, i) },
-      preservesPartitioning = true)
-    val nodes = both.mapPartitions(
-      _.map { case (n, _) => (n, ()) }, preservesPartitioning = true)
-
-    val live = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    // one half-round: raw = Σ over `a` of the partner score (uniform
-    // `init` on round 1, else the node-keyed partner RDD), then max-norm
-    def halfRound(a: RDD[(Any, Array[Any])], partner: RDD[(Any, Long)],
-        init: Long): RDD[(Any, Long)] = {
-      // partner attach = narrow co-partitioned zipPartitions probe (the
-      // node-sized partner score map streams the persisted adjacency —
-      // no per-round cogroup hash build of the adjacency; inner-join
-      // semantics kept: unscored nodes contribute nothing). Output
-      // re-keys to the neighbor, so the reduce keeps its shuffle.
-      val raw = (if (partner == null)
-          a.flatMap { case (_, ds) => ds.iterator.map(d => (d, init)) }
-        else a.zipPartitions(partner) { (aIt, pIt) =>
-          val pm = new java.util.HashMap[Any, java.lang.Long]()
-          pIt.foreach { case (nd, s) => pm.put(nd, s) }
-          aIt.flatMap { case (src, ds) =>
-            val sv = pm.get(src)
-            if (sv == null) Iterator.empty
-            else { val s = sv.longValue(); ds.iterator.map(d => (d, s)) }
-          }
-        })
-        .reduceByKey(part, _ + _)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    val (e, ids) = encode(edges, srcCol, dstCol)
+    val fields = Seq(StructField("auth", LongType, nullable = false),
+      StructField("hub", LongType, nullable = false))
+    val g = labelled(spark, "hits build")(
+      buildGraph(e, directed = true, withIn = true))
+    if (g == null) return ids.empty(spark, fields)
+    val live = ArrayBuffer.empty[RDD[Array[Long]]]
+    // raw = Σ over the lists of the partner's max-normed score (uniform
+    // on round 1), persisted; returns it with its max
+    def half(label: String, partner: RDD[Array[Long]], pMax: Long,
+        in: Boolean): (RDD[Array[Long]], Long) = labelled(spark, label) {
+      val raw = gather(g, null, scatter(g, partner, in) { (_, s, j) =>
+        if (s == null) ScaleHits else s(j) * ScaleHits / pMax
+      })((_, x) => x).persist(StorageLevel.MEMORY_AND_DISK)
       live += raw
-      val mx = raw.values.max()
+      val mx = raw.map(_.foldLeft(0L)(math.max)).fold(0L)(math.max)
       // the documented exactness bound (maxDegree < 2^63/ScaleHits^2, see
       // ScaleHits scaladoc) enforced at runtime: s <= mx, so one check on
       // the round maximum guards every normalization multiply — real
       // web-graph authorities exceed ~9.2e6 in-degree and would otherwise
-      // wrap into negative scores with no error (modularity() fails
-      // loudly for its analogous bound; so does HITS now)
+      // wrap into negative scores with no error
       require(mx <= Long.MaxValue / ScaleHits,
         s"HITS: round max raw score $mx would overflow the ScaleHits " +
           "normalization — in-degree beyond the documented ~9.2e6 bound")
-      raw.mapValues(s => s * ScaleHits / mx)
+      (raw, mx)
     }
-
-    var auth: RDD[(Any, Long)] = null
-    var hub: RDD[(Any, Long)] = null
-    for (i <- 1 to iterations) {
-      auth = halfRound(fwd, hub, ScaleHits) // hub⁰ is uniform
-      hub = halfRound(rev, auth, 0L)
+    var (auth, authMax) = (null: RDD[Array[Long]], 1L)
+    var (hub, hubMax) = (null: RDD[Array[Long]], 1L)
+    for (r <- 1 to iterations) {
+      val (a, am) = half(s"hits r$r: auth", hub, hubMax, in = false)
+      auth = a; authMax = am
+      val (h, hm) = half(s"hits r$r: hub", auth, authMax, in = true)
+      hub = h; hubMax = hm
     }
+    val (am, hm) = (authMax, hubMax)
+    val rows = nodeRows(g, auth, hub) { (x, j, s) =>
+      Row(x, s(0)(j) * ScaleHits / am, s(1)(j) * ScaleHits / hm)
+    }
+    val out = labelled(spark, "hits output")(output(spark, rows, ids, fields))
+    (live :+ g.blocks).foreach(_.unpersist(blocking = false))
+    ids.release()
+    out
+  }
 
-    // final attach: one narrow 3-way zipPartitions over the
-    // co-partitioned node set and score maps (was two cogroup joins)
-    val scored = nodes.zipPartitions(auth, hub) { (nIt, aIt, hIt) =>
-      val am = new java.util.HashMap[Any, java.lang.Long]()
-      aIt.foreach { case (n, s) => am.put(n, s) }
-      val hm = new java.util.HashMap[Any, java.lang.Long]()
-      hIt.foreach { case (n, s) => hm.put(n, s) }
-      nIt.map { case (node, _) =>
-        val a = am.get(node); val h = hm.get(node)
-        Row(node, if (a == null) 0L else a.longValue(),
-          if (h == null) 0L else h.longValue())
+  /** k-core: the maximal subgraph in which every node has degree ≥ k
+    * (Seidman 1983), by Matula–Beck peeling — iteratively drop nodes with
+    * degree < k and their edges until nothing changes. In curation this
+    * isolates the densely-interlinked hub/boilerplate clusters that raw
+    * degree or PageRank over-ranks; genuinely iterative (monotone edge
+    * DELETION), so unlike the fixed-point rank queries it has no
+    * recursive-SQL replay — correctness is KCoreSpec's (brute-force
+    * peeling equivalence + the degree/maximality invariants).
+    *
+    * Scale shape (INCREMENTAL degree maintenance): the loop carries only
+    * a live-degree array per block (−1 once peeled). Per round every
+    * live sub-k node leaves at once and sends one decrement along its
+    * list — decrement traffic TOTALS O(E) across all rounds, every edge
+    * dying at most twice — and survivors subtract what they received,
+    * so each round equals one synchronous recompute-from-scratch peel.
+    * The count of live sub-k nodes left after a round is its one action
+    * and the convergence test.
+    *
+    * A graph whose peeling depth exceeds `maxIter` (pathological chains)
+    * does NOT fail the query: peeling is monotone deletion, so the
+    * partially-peeled result is a valid SUPERSET of the k-core — it is
+    * returned as-is with a logged warning, and equals the k-core exactly
+    * whenever `maxIter` ≥ peeling depth.
+    *
+    * Output: (node, core_degree) for k-core members — core_degree is the
+    * degree WITHIN the core (≥ k by the fixpoint). */
+  def kCore(
+      pairs: DataFrame,
+      leftCol: String,
+      rightCol: String,
+      k: Int,
+      maxIter: Int = 100): DataFrame = {
+    require(k >= 1, s"k must be >= 1 (got $k)")
+    val spark = pairs.sparkSession
+    val (e, ids) = encode(pairs, leftCol, rightCol)
+    val fields = Seq(StructField("core_degree", LongType, nullable = false))
+    val g = labelled(spark, "kcore build")(
+      buildGraph(e, directed = false, withIn = false))
+    if (g == null) return ids.empty(spark, fields)
+    val peelable = (d: Long) => d >= 0L && d < k
+    var live = g.blocks.map(_.deg.map(_.toLong))
+    var pending = -1L // unknown until round 1 has run
+    var round = 0
+    while (pending != 0L && round < maxIter) {
+      round += 1
+      val prev = live
+      live = labelled(spark, s"kcore r$round: peel") {
+        // decrements aimed at nodes leaving in the same round vanish
+        val next = gather(g, prev, scatter(g, prev, in = false)(
+            (_, s, j) => if (peelable(s(j))) 1L else 0L))(
+            (d, dec) => if (d < k) -1L else d - dec)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        // bound closure/lineage depth on pathological deep peels
+        if (round % 16 == 0) next.localCheckpoint()
+        pending = countWhere(next)(peelable)
+        next
       }
+      prev.unpersist(blocking = false)
     }
-    val out = spark.createDataFrame(scored,
-        StructType(Seq(StructField("node", nodeType, nullable = false),
-          StructField("auth", LongType, nullable = false),
-          StructField("hub", LongType, nullable = false))))
-      .localCheckpoint(eager = true)
-    (live ++ Seq(both)).foreach(_.unpersist(blocking = false))
+    if (pending != 0L)
+      org.slf4j.LoggerFactory.getLogger(LinkAnalysis.getClass).warn(
+        s"kCore: no fixpoint after $maxIter rounds; returning the current " +
+          "still-shrinking superset of the k-core")
+    // degree-0 stragglers (possible only on the truncated path) get no row
+    val rows = nodeRows(g, live) { (x, j, s) =>
+      if (s.head(j) >= 1L) Row(x, s.head(j)) else null
+    }
+    val out = labelled(spark, "kcore output")(output(spark, rows, ids, fields))
+    g.blocks.unpersist(blocking = false)
+    live.unpersist(blocking = false)
+    ids.release()
+    out
+  }
+
+  /** Single-source BFS hop distances over an undirected graph, bounded
+    * at `maxHops` — unweighted shortest paths, the reachability-radius
+    * signal (how many link hops from a trusted seed is this host?) that
+    * complements [[pageRank]]'s centrality and [[Components]]' global
+    * reachability. Fixed-depth min-plus relaxation is pure integer, so a
+    * D-round unroll replays exactly in SQL (the kcore/pagerank pattern);
+    * and because hop distances are monotone, rounds past the true
+    * eccentricity are no-ops — the early-exit on an empty frontier is
+    * purely an optimization, never a semantic change.
+    *
+    * Spark shape: the loop carries a distance array per block (−1 while
+    * unreached); hop h scatters from the nodes at distance h−1 and
+    * gathers the newly reached, so each node's list is expanded exactly
+    * once — total expansion work O(E) across ALL rounds. The count of
+    * nodes reached at h is the round's one action.
+    *
+    * @return (node, dist INT) for every node within `maxHops` of
+    *         `source`, which has dist 0 — node is BIGINT for integral
+    *         ids, the caller's type otherwise. Empty if `source` has no
+    *         edges (an isolated id is not "in" the pair graph). */
+  def bfsHops(
+      pairs: DataFrame,
+      leftCol: String,
+      rightCol: String,
+      source: Any,
+      maxHops: Int): DataFrame = {
+    require(maxHops >= 0)
+    val spark = pairs.sparkSession
+    val (e, encoded) = encode(pairs, leftCol, rightCol)
+    val ids = if (encoded.dict == null) encoded.copy(nodeType = LongType) else encoded
+    val fields = Seq(StructField("dist", IntegerType, nullable = false))
+    val src = ids.resolve(Seq(source)).values.headOption
+    val g = if (src.isEmpty) null else labelled(spark, "bfs build")(
+      buildGraph(e, directed = false, withIn = false))
+    if (g == null) return ids.empty(spark, fields)
+    val s0 = src.get
+    var dist = g.blocks.map(_.nodes.map(x => if (x == s0) 0L else -1L))
+    var frontier = -1L // hop 1 finds nothing when the source is no node
+    var hop = 0
+    while (frontier != 0L && hop < maxHops) {
+      hop += 1
+      val (h, prev) = (hop.toLong, dist)
+      dist = labelled(spark, s"bfs hop $hop") {
+        val next = gather(g, prev, scatter(g, prev, in = false)(
+            (_, s, j) => if (s(j) == h - 1) 1L else 0L))(
+            (d, reached) => if (d < 0L && reached > 0L) h else d)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        if (hop % 16 == 0) next.localCheckpoint()
+        frontier = countWhere(next)(_ == h)
+        next
+      }
+      prev.unpersist(blocking = false)
+    }
+    val rows = nodeRows(g, dist) { (x, j, s) =>
+      if (s.head(j) >= 0L) Row(x, s.head(j).toInt) else null
+    }
+    val out = labelled(spark, "bfs output")(output(spark, rows, ids, fields))
+    g.blocks.unpersist(blocking = false)
+    dist.unpersist(blocking = false)
+    ids.release()
     out
   }
 
@@ -536,214 +749,6 @@ object LinkAnalysis {
     *
     * @return (node BIGINT, degree BIGINT, triangles BIGINT, lcc DOUBLE),
     *         one row per node that appears in `pairs`. */
-  /** k-core: the maximal subgraph in which every node has degree ≥ k
-    * (Seidman 1983), by Matula–Beck peeling — iteratively drop nodes with
-    * degree < k and their edges until nothing changes. In curation this
-    * isolates the densely-interlinked hub/boilerplate clusters that raw
-    * degree or PageRank over-ranks; genuinely iterative (monotone edge
-    * DELETION), so unlike the fixed-point rank queries it has no
-    * recursive-SQL replay — correctness is KCoreSpec's (brute-force
-    * peeling equivalence + the degree/maximality invariants).
-    *
-    * Scale shape (INCREMENTAL degree maintenance — the r18 rewrite of
-    * the recompute-from-scratch DataFrame loop, for INTEGRAL node ids):
-    * the adjacency is collapsed ONCE into the hash-partitioned
-    * hub-sliced PRIMITIVE layout of [[buildAdjLong]], and the loop
-    * carries only the NODE-sized live degree map. Per round, the set of
-    * sub-k nodes is dropped and each dropped node sends one decrement
-    * per incident edge — decrement traffic TOTALS O(E) across all
-    * rounds (every edge dies at most twice), where the old shape paid a
-    * full 2·E degree aggregate plus two edge-set semi-joins and an
-    * edge-set checkpoint write EVERY round. The per-round adjacency
-    * probe is a narrow co-partitioned zipPartitions with a sorted-array
-    * membership test — no shuffle, no cogroup hash build, no boxing
-    * (the boxed join form of this loop measured 5× the OLD shape's
-    * CPU before the primitive specialization; measure first). Rounds
-    * are the same synchronous Matula–Beck peel (all current sub-k nodes
-    * leave together), so the per-round survivor sets — and the
-    * maxIter-truncated partial result — are exactly the old
-    * implementation's; KCoreSpec pins that equivalence. Non-integral
-    * node ids (no primitive encoding) take the pre-r18 DataFrame peel,
-    * kept verbatim.
-    *
-    * A graph whose peeling depth exceeds `maxIter` (pathological chains)
-    * does NOT fail the query: peeling is monotone deletion, so the
-    * partially-peeled result is a valid SUPERSET of the k-core — it is
-    * returned as-is with a logged warning, and equals the k-core exactly
-    * whenever `maxIter` ≥ peeling depth.
-    *
-    * Output: (node, core_degree) for k-core members — core_degree is the
-    * degree WITHIN the core (≥ k by the fixpoint). */
-  def kCore(
-      pairs: DataFrame,
-      leftCol: String,
-      rightCol: String,
-      k: Int,
-      maxIter: Int = 100): DataFrame = {
-    require(k >= 1, s"k must be >= 1 (got $k)")
-    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType}
-    val nodeType = pairs.schema(leftCol).dataType
-    require(pairs.schema(rightCol).dataType == nodeType,
-      s"endpoint type mismatch: $nodeType vs ${pairs.schema(rightCol).dataType}")
-    nodeType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        kCoreIntegral(pairs, leftCol, rightCol, k, maxIter)
-      case _ => kCoreGeneric(pairs, leftCol, rightCol, k, maxIter)
-    }
-  }
-
-  private def kCoreIntegral(
-      pairs: DataFrame,
-      leftCol: String,
-      rightCol: String,
-      k: Int,
-      maxIter: Int): DataFrame = {
-    val spark = pairs.sparkSession
-    val nodeType = pairs.schema(leftCol).dataType
-    val eDist = pairs
-      .select(col(leftCol).cast("long").as("a"),
-        col(rightCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-    val (adj, m2, part) = buildAdjLong(eDist, hubSplit = 100000)
-    val outSchema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("core_degree", LongType, nullable = false)))
-    def toNodeType(df: DataFrame): DataFrame =
-      if (nodeType == LongType) df
-      else df.select(col("node").cast(nodeType).as("node"), col("core_degree"))
-    if (m2 == 0L)
-      return toNodeType(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], outSchema))
-    // live degrees, node-sized; slices of one hub sum back to its degree
-    var alive: RDD[(Long, Long)] = adj
-      .mapPartitions(_.map { case (n, a) => (n, a.length.toLong) },
-        preservesPartitioning = true)
-      .reduceByKey(part, _ + _)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // convergence is detected from the survivor count (next == alive ⟺
-    // the round removed nothing ⟺ no node had degree < k), so each round
-    // is ONE action — the r18 shape paid a separate removed.count() job
-    // per round on top of next.count()
-    var aliveCount = alive.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // removed recomputes narrowly from the persisted alive — cheaper
-      // than persist/unpersist churn for a set read twice per round
-      val removed = alive.mapPartitions(_.filter(_._2 < k),
-        preservesPartitioning = true)
-      locally {
-        // each removed node decrements every neighbor once; decrements
-        // aimed at other removed nodes vanish in the survivor probe —
-        // the survivor degrees are exactly the induced-subgraph degrees,
-        // so each round equals one synchronous recompute-from-scratch
-        // peel. Membership tests are sorted-Array binary search / LongMap
-        // probes over CO-PARTITIONED sides (zipPartitions — no cogroup
-        // hash build, no boxing; the boxed join form of this loop
-        // measured 5× the CPU of the old DataFrame peel): the round's
-        // only shuffle is the decrement reduceByKey, sized by the
-        // round's dying edges.
-        // preservesPartitioning MUST be false here: the emitted key is
-        // the NEIGHBOR, not the probed node — claiming the old layout
-        // would let reduceByKey skip its shuffle and sum only
-        // partition-local decrements (caught by the sf0.01 oracle diff:
-        // kcore over-kept 267 nodes, bfs under-discovered 6k)
-        val dec: RDD[(Long, Long)] = adj.zipPartitions(removed) { (aIt, rIt) =>
-          val rs = rIt.map(_._1).toArray
-          java.util.Arrays.sort(rs)
-          if (rs.isEmpty) Iterator.empty
-          else aIt.flatMap { case (n, nbrs) =>
-            if (java.util.Arrays.binarySearch(rs, n) >= 0)
-              nbrs.iterator.map((_, 1L))
-            else Iterator.empty
-          }
-        }.reduceByKey(part, _ + _)
-        val next = alive.zipPartitions(
-            dec, preservesPartitioning = true) { (aIt, dIt) =>
-          val dm = new scala.collection.mutable.LongMap[Long]()
-          dIt.foreach { case (n, c) => dm(n) = c }
-          aIt.collect { case (n, d) if d >= k => (n, d - dm.getOrElse(n, 0L)) }
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        // bound closure/lineage depth on pathological deep peels — the
-        // truncation is metadata-only (the RDD is persisted either way)
-        if (iter % 16 == 15) next.localCheckpoint()
-        val nextCount = next.count()
-        if (nextCount == aliveCount) {
-          // nothing was removed (next ≡ alive): fixpoint reached
-          converged = true
-          next.unpersist(blocking = false)
-        } else {
-          alive.unpersist(blocking = false)
-          alive = next
-          aliveCount = nextCount
-        }
-      }
-      iter += 1
-    }
-    if (!converged) {
-      val live = alive.filter(_._2 >= 1L).count()
-      if (live > 0L)
-        org.slf4j.LoggerFactory.getLogger(LinkAnalysis.getClass).warn(
-          s"kCore: no fixpoint after $maxIter rounds ($live nodes live); " +
-            "returning the current still-shrinking superset of the k-core")
-    }
-    // degree-0 stragglers (possible only on the truncated path) match the
-    // old shape's "no edge rows -> no degree row" behavior via the filter
-    val rows = alive.filter(_._2 >= 1L).map { case (n, d) => Row(n, d) }
-    val out = toNodeType(spark.createDataFrame(rows, outSchema))
-      .localCheckpoint(eager = true)
-    adj.unpersist(blocking = false)
-    alive.unpersist(blocking = false)
-    out
-  }
-
-  /** The pre-r18 DataFrame peel, kept verbatim for NON-integral node
-    * ids (strings, decimals), which have no primitive-long encoding. */
-  private def kCoreGeneric(
-      pairs: DataFrame,
-      leftCol: String,
-      rightCol: String,
-      k: Int,
-      maxIter: Int): DataFrame = {
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("u").as("node"))
-        .unionAll(e.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("core_degree"))
-    var edges = pairs
-      .select(col(leftCol).as("a"), col(rightCol).as("b"))
-      .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-      .localCheckpoint(eager = true)
-    var n = edges.count()
-    var iter = 0
-    var converged = n == 0L
-    while (!converged && iter < maxIter) {
-      val keep = degrees(edges).filter(col("core_degree") >= k).select("node")
-      val pruned = edges
-        .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .localCheckpoint(eager = true)
-      val m = pruned.count()
-      converged = m == n
-      // pruned is MATERIALIZED (eager), so the superseded round's edge
-      // copy can go — without this a deep peel pins O(rounds) edge-set
-      // copies of un-evictable (lineage-truncated) blocks. The FINAL
-      // round's checkpoint stays: the returned degrees plan reads it.
-      releaseCheckpoint(edges)
-      edges = pruned
-      n = m
-      iter += 1
-    }
-    if (!converged && n > 0L)
-      org.slf4j.LoggerFactory.getLogger(LinkAnalysis.getClass).warn(
-        s"kCore: no fixpoint after $maxIter rounds ($n edges live); " +
-          "returning the current still-shrinking superset of the k-core")
-    degrees(edges)
-  }
-
   def triangles(pairs: DataFrame, leftCol: String, rightCol: String): DataFrame = {
     val e = pairs
       .select(col(leftCol).cast("long").as("a"), col(rightCol).cast("long").as("b"))
@@ -816,8 +821,8 @@ object LinkAnalysis {
     * ~10⁶: at degree ≥ 1000003 the tail of the id-ranked neighbor list
     * is unreachable, and as degree approaches it the modulo bias skews
     * transitions (≤0.1 % skew at degree 1000 — negligible; material
-    * past ~10⁵). Hub-heavy graphs should split mega-hubs (PageRank's
-    * `hubSplit` pattern) or contract them before walking.
+    * past ~10⁵). Hub-heavy graphs should contract mega-hubs (or cap
+    * their degree) before walking.
     *
     * @return (start BIGINT, walk INT, step INT, node BIGINT) — step 0 is
     *         the start node; (length+1) rows per walk. */
@@ -1103,158 +1108,6 @@ object LinkAnalysis {
         sum(col("term")).as("aa_score_scaled"))
   }
 
-  /** Community detection by synchronous label propagation (Raghavan,
-    * Albert & Kumara 2007, Phys. Rev. E 76): every node starts labeled
-    * with its own id; each round, every node adopts the label held by the
-    * PLURALITY of its neighbors (tiebreak: smallest label) — densely
-    * interlinked groups converge onto one label within a few rounds. In
-    * curation this is the modularity-flavored sibling of [[Components]]:
-    * components find REACHABLE groups (any bridge merges two clusters),
-    * LPA finds DENSE groups (a single bridge edge is outvoted), which is
-    * what separates two boilerplate families that share one stray link.
-    *
-    * Determinism: the classic async/randomized LPA is not reproducible,
-    * so this is the SYNCHRONOUS fixed-round variant with a total-order
-    * tiebreak — all counts are integers and the argmax is
-    * (count DESC, label ASC), so a fixed `iterations` replays bit-for-bit
-    * as unrolled GROUP-BY + window CTEs in any engine (house pattern:
-    * the [[pageRank]]/[[hits]] integer fixed points). Synchronous LPA on
-    * a bipartite-ish region can oscillate rather than converge — also
-    * deterministic, and why `iterations` is a fixed parameter rather
-    * than a convergence test.
-    *
-    * Spark shape, per round: adjacency (built ONCE, hash-partitioned,
-    * hub-sliced like [[pageRank]]) joins the node-sized label map
-    * narrowly and emits one (neighbor, label) message per edge; the
-    * round's ONLY shuffle is a node-sized `aggregateByKey` of partial
-    * per-node label-count maps (map-side combined, so what crosses the
-    * wire is one map per (node, sender-partition), not one record per
-    * edge), and the plurality argmax folds into the same pass. Round 1
-    * skips the join: the initial label of a source IS its id, already
-    * in the adjacency key. A node's count map is bounded by its
-    * neighbors' DISTINCT labels — worst case its degree, the same skew
-    * profile as receiving the messages at all; a mega-hub's inbound
-    * maps merge across its senders' combiners.
-    *
-    * @param pairs undirected edges as a pair list (self-loops/nulls
-    *              dropped, duplicates collapsed); node ids cast to LONG —
-    *              labels are node ids, and the tiebreak needs a total
-    *              order that replays in SQL
-    * @return (node BIGINT, label BIGINT) — `label` is the community id
-    *         (some member's node id) after exactly `iterations` rounds
-    */
-  /** Single-source BFS hop distances over an undirected graph, bounded
-    * at `maxHops` — unweighted shortest paths, the reachability-radius
-    * signal (how many link hops from a trusted seed is this host?) that
-    * complements [[pageRank]]'s centrality and [[Components]]' global
-    * reachability. Fixed-depth min-plus relaxation is pure integer, so a
-    * D-round unroll replays exactly in SQL (the kcore/pagerank pattern);
-    * and because hop distances are monotone, rounds past the true
-    * eccentricity are no-ops — the early-exit on an empty frontier is
-    * purely an optimization, never a semantic change.
-    *
-    * Spark shape (the r18 rewrite of the DataFrame frontier loop, which
-    * re-shuffled the FULL edge list three times per round — semi-join,
-    * distinct, anti-join — plus a per-round checkpoint write): the
-    * adjacency is collapsed ONCE into the hash-partitioned hub-sliced
-    * PRIMITIVE layout of [[buildAdjLong]]; every later round probes it
-    * with a narrow co-partitioned zipPartitions (sorted-array frontier
-    * membership — no cogroup hash build, no boxing), so total
-    * adjacency-EXPANSION work is O(E) across ALL rounds — each node's
-    * list is expanded exactly once, the round it enters the frontier.
-    * The known-distance map stays co-partitioned, so the dedup reduce
-    * and the known-set subtraction are narrow too; the only per-round
-    * shuffle-sized object is the new-neighbor candidate set. Hop
-    * distances are unique integers, so the output is bit-identical to
-    * the old shape under any partitioning.
-    *
-    * @return (node BIGINT, dist INT) for every node within `maxHops` of
-    *         `source`; the source itself has dist 0. Empty if `source`
-    *         has no edges (an isolated id is not "in" the pair graph). */
-  def bfsHops(
-      pairs: DataFrame,
-      leftCol: String,
-      rightCol: String,
-      source: Long,
-      maxHops: Int): DataFrame = {
-    require(maxHops >= 0)
-    val spark = pairs.sparkSession
-    val und = pairs
-      .select(col(leftCol).cast("long").as("a"), col(rightCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-    val (adj, m2, part) = buildAdjLong(und, hubSplit = 100000)
-    val outSchema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("dist", IntegerType, nullable = false)))
-    if (m2 == 0L)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], outSchema)
-    // seed only if the source actually appears in the graph; the filter
-    // preserves adj's partitioning, and the reduce collapses hub slices
-    val seed: RDD[(Long, Int)] = adj
-      .mapPartitions(_.collect { case (n, _) if n == source => (n, 0) },
-        preservesPartitioning = true)
-      .reduceByKey(part, (a, _) => a)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // dist = the per-hop frontiers, each persisted once and UNIONED
-    // narrowly (same partitioner → PartitionerAwareUnionRDD) — the r18
-    // shape instead re-persisted and re-counted a merged COPY of the
-    // whole known map every round, an O(V) cache write + count per hop
-    // that the r18 verdict flagged in the cpu channel; the union view
-    // reads the same persisted blocks with no copies (guide §1.2 step 1)
-    var frontiers = List[RDD[(Long, Int)]](seed)
-    var known: RDD[(Long, Int)] = seed
-    var frontier: RDD[(Long, Int)] = seed
-    var k = 1
-    var frontierSize = seed.count()
-    while (k <= maxHops && frontierSize > 0L) {
-      val hop = k
-      // expand the frontier's neighbor lists via a narrow co-partitioned
-      // zipPartitions probe (sorted-array membership — no cogroup hash
-      // build over the full adjacency, no boxing), dedup candidates in
-      // the round's only shuffle (sized by discovered neighbors), then
-      // drop already-known nodes with a LongMap probe (narrow again)
-      // preservesPartitioning deliberately NOT claimed on the expansion:
-      // its output key is the NEIGHBOR (a different node), so the dedup
-      // reduce below genuinely needs its shuffle (claiming the layout
-      // made reduceByKey skip it and lose cross-partition discoveries)
-      val next = adj.zipPartitions(frontier) { (aIt, fIt) =>
-          val fs = fIt.map(_._1).toArray
-          java.util.Arrays.sort(fs)
-          if (fs.isEmpty) Iterator.empty
-          else aIt.flatMap { case (n, nbrs) =>
-            if (java.util.Arrays.binarySearch(fs, n) >= 0)
-              nbrs.iterator.map((_, hop))
-            else Iterator.empty
-          }
-        }
-        .reduceByKey(part, (a, _) => a)
-        .zipPartitions(known, preservesPartitioning = true) { (cIt, dIt) =>
-          val seen = new scala.collection.mutable.LongMap[Boolean]()
-          dIt.foreach { case (n, _) => seen(n) = true }
-          cIt.filter(c => !seen.contains(c._1))
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      frontierSize = next.count()
-      if (frontierSize > 0L) {
-        frontiers ::= next
-        known = known.union(next) // partitioner-aware → stays narrow
-        frontier = next
-      } else {
-        next.unpersist(blocking = false)
-      }
-      k += 1
-    }
-    val out = spark.createDataFrame(
-        known.map { case (n, d) => Row(n, d) }, outSchema)
-      .localCheckpoint(eager = true)
-    adj.unpersist(blocking = false)
-    frontiers.foreach(_.unpersist(blocking = false))
-    out
-  }
-
   /** One LPA plurality vote: per-node argmax (count DESC, label ASC) over
     * incoming (node, label) messages — map-merge form: ONE node-keyed
     * aggregateByKey whose combiner holds a per-node label→count map.
@@ -1297,6 +1150,47 @@ object LinkAnalysis {
       if (x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)) x else y)
     .mapValues(_._1)
 
+  /** Community detection by synchronous label propagation (Raghavan,
+    * Albert & Kumara 2007, Phys. Rev. E 76): every node starts labeled
+    * with its own id; each round, every node adopts the label held by the
+    * PLURALITY of its neighbors (tiebreak: smallest label) — densely
+    * interlinked groups converge onto one label within a few rounds. In
+    * curation this is the modularity-flavored sibling of [[Components]]:
+    * components find REACHABLE groups (any bridge merges two clusters),
+    * LPA finds DENSE groups (a single bridge edge is outvoted), which is
+    * what separates two boilerplate families that share one stray link.
+    *
+    * Determinism: the classic async/randomized LPA is not reproducible,
+    * so this is the SYNCHRONOUS fixed-round variant with a total-order
+    * tiebreak — all counts are integers and the argmax is
+    * (count DESC, label ASC), so a fixed `iterations` replays bit-for-bit
+    * as unrolled GROUP-BY + window CTEs in any engine (house pattern:
+    * the [[pageRank]]/[[hits]] integer fixed points). Synchronous LPA on
+    * a bipartite-ish region can oscillate rather than converge — also
+    * deterministic, and why `iterations` is a fixed parameter rather
+    * than a convergence test.
+    *
+    * Spark shape, per round: adjacency (built ONCE, hash-partitioned,
+    * lists longer than `hubSplit` sliced into several records) joins the
+    * node-sized label map narrowly and emits one (neighbor, label)
+    * message per edge; the
+    * round's ONLY shuffle is a node-sized `aggregateByKey` of partial
+    * per-node label-count maps (map-side combined, so what crosses the
+    * wire is one map per (node, sender-partition), not one record per
+    * edge), and the plurality argmax folds into the same pass. Round 1
+    * skips the join: the initial label of a source IS its id, already
+    * in the adjacency key. A node's count map is bounded by its
+    * neighbors' DISTINCT labels — worst case its degree, the same skew
+    * profile as receiving the messages at all; a mega-hub's inbound
+    * maps merge across its senders' combiners.
+    *
+    * @param pairs undirected edges as a pair list (self-loops/nulls
+    *              dropped, duplicates collapsed); node ids cast to LONG —
+    *              labels are node ids, and the tiebreak needs a total
+    *              order that replays in SQL
+    * @return (node BIGINT, label BIGINT) — `label` is the community id
+    *         (some member's node id) after exactly `iterations` rounds
+    */
   def labelPropagation(
       pairs: DataFrame,
       leftCol: String,

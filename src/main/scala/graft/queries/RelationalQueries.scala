@@ -613,11 +613,8 @@ object RelationalQueries {
         concat(lit("s:"), col("sk")).as("dst"))
       val rev = base.select(concat(lit("s:"), col("sk")).as("src"),
         concat(lit("p:"), col("pk")).as("dst"))
-      // base is distinct and the p:/s: prefixes are disjoint, so the
-      // union is duplicate-free by construction — skip the edge shuffle
       graft.operators.LinkAnalysis
-        .pageRank(fwd.unionByName(rev), "src", "dst", iterations = 5,
-          assumeDistinct = true)
+        .pageRank(fwd.unionByName(rev), "src", "dst", iterations = 5)
         .orderBy("node")
     },
 
@@ -637,7 +634,6 @@ object RelationalQueries {
         concat(lit("p:"), col("pk")).as("dst"))
       graft.operators.LinkAnalysis
         .pageRank(fwd.unionByName(rev), "src", "dst", iterations = 5,
-          assumeDistinct = true,
           teleportSeeds = Seq("p:3", "p:6", "p:9"))
         .filter(col("pr") > 0L)
         .orderBy("node")
@@ -652,7 +648,7 @@ object RelationalQueries {
       val edges = base.select(concat(lit("p:"), col("pk")).as("src"),
         concat(lit("s:"), col("sk")).as("dst"))
       graft.operators.LinkAnalysis
-        .hits(edges, "src", "dst", iterations = 3, assumeDistinct = true)
+        .hits(edges, "src", "dst", iterations = 3)
         .orderBy("node")
     },
 

@@ -595,9 +595,7 @@ object TextQueries {
       val tok = table(s, dir, "documents")
         .select(TextOps.tokens(col("text")).as("ts"))
         .filter(size(col("ts")) >= 2)
-      // canonical u<v co-occurrence pairs, then both directions — the
-      // fan-out is duplicate-free by construction (pageRank skips its
-      // edge-distinct shuffle)
+      // canonical u<v co-occurrence pairs, then both directions
       val pairs = tok
         .select(explode(expr(
           "transform(sequence(0, size(ts) - 2), " +
@@ -610,7 +608,7 @@ object TextQueries {
       val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
         .unionByName(pairs.select(col("v").as("src"), col("u").as("dst")))
       graft.operators.LinkAnalysis
-        .pageRank(edges, "src", "dst", iterations = 5, assumeDistinct = true)
+        .pageRank(edges, "src", "dst", iterations = 5)
         .withColumn("rnk",
           row_number().over(Window.orderBy(desc("pr"), asc("node"))))
         .filter(col("rnk") <= 20)

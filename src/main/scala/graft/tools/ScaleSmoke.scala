@@ -281,10 +281,9 @@ object ScaleSmoke {
           s"hot set should dominate the top ranks, got $top/1000")
         pr.count()
       }
-      // mega-hub: one source with ~1M distinct out-edges crosses the
-      // default hubSplit=100k threshold, so its adjacency is stored as
-      // ~10 edge-partitioned slices — no task materializes the full
-      // out-list, and ranks are bit-identical to the unsplit layout
+      // mega-hub: one source with ~1M distinct out-edges spans ~16
+      // block records of the 64 Ki-entry budget — no record holds the
+      // full out-list, and ranks are bit-identical to any other layout
       time(s"pagerank 5 iters, mega-hub source (~1M out-degree)") {
         val hubEdges = spark.range(0L, mEdges).select(
             lit(-1L).as("src"),

@@ -472,50 +472,17 @@ class AnnMaintainSpec extends SparkSpec {
     // merge's cap re-check and renumbering are pure arithmetic. Counted
     // with a job-group-tagged listener; a sentinel job flushes the FIFO
     // listener bus so "zero observed" is deterministic, not a race.
-    val tagged = new java.util.concurrent.atomic.AtomicInteger
-    val total = new java.util.concurrent.atomic.AtomicInteger
-    val tag = s"graft-jobcount-${System.nanoTime()}"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        total.incrementAndGet()
-        if (js.properties != null &&
-            tag == js.properties.getProperty("spark.jobGroup.id"))
-          tagged.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def flush(): Unit = {
-      val base = total.get()
-      spark.range(2).count() // untagged sentinel
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (total.get() == base && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      assert(total.get() > base, "listener never observed the sentinel job")
-    }
-    try {
-      val (ia, ib, _) = halves
-      assert(ia.nlist >= 0 && ia.maxPid >= 0) // carried from build
-      flush() // drain anything in flight before measuring
-      spark.sparkContext.setJobGroup(tag, tag)
-      val m =
-        try AnnIvf.merge(ia, ib)
-        finally spark.sparkContext.clearJobGroup()
-      flush() // FIFO bus: sentinel observed ⇒ everything before it observed
-      assert(tagged.get() === 0,
-        s"metadata merge scheduled ${tagged.get()} Spark job(s)")
-      assert(m.nlist === ia.nlist + ib.nlist)
-      // legacy control: stripped metadata must pay the bounded counts —
-      // the detector sees jobs when jobs happen
-      val la = AnnIvf.Index(ia.assigned, ia.centroids, ia.writeSalt)
-      val lb = AnnIvf.Index(ib.assigned, ib.centroids, ib.writeSalt)
-      spark.sparkContext.setJobGroup(tag, tag)
-      try AnnIvf.merge(la, lb)
-      finally spark.sparkContext.clearJobGroup()
-      flush()
-      assert(tagged.get() > 0,
-        "legacy merge should have paid bounded counts (negative control)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (ia, ib, _) = halves
+    assert(ia.nlist >= 0 && ia.maxPid >= 0) // carried from build
+    var m: AnnIvf.Index = null
+    val jobs = SpecUtil.jobsOf(spark) { m = AnnIvf.merge(ia, ib) }
+    assert(jobs.isEmpty, s"metadata merge scheduled ${jobs.size} Spark job(s)")
+    assert(m.nlist === ia.nlist + ib.nlist)
+    // legacy control: stripped metadata must pay the bounded counts —
+    // the detector sees jobs when jobs happen
+    val la = AnnIvf.Index(ia.assigned, ia.centroids, ia.writeSalt)
+    val lb = AnnIvf.Index(ib.assigned, ib.centroids, ib.writeSalt)
+    assert(SpecUtil.jobsOf(spark)(AnnIvf.merge(la, lb)).nonEmpty,
+      "legacy merge should have paid bounded counts (negative control)")
   }
 }

@@ -153,6 +153,36 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
+  test("the adaptive local branch decides with one bounded collect") {
+    // a few-hundred-edge pair set: the local path is one limited collect
+    // (plus the exchange it reads), not checkpoint + count + collect; a
+    // tiny budget still takes the distributed loop, with the same labels
+    val rnd = new scala.util.Random(23)
+    val edges = (0 until 300).map(_ =>
+      (rnd.nextInt(150).toLong, rnd.nextInt(150).toLong)).filter(e => e._1 != e._2)
+    val df = edges.toDF("left_id", "right_id")
+    def run(budget: Long) = Components.connectedComponentsAuto(
+      df, "left_id", "right_id", localMaxEdges = budget)
+    run(1L << 20).collect() // warm
+    var local: org.apache.spark.sql.DataFrame = null
+    val jobs = SpecUtil.jobsOf(spark) { local = run(1L << 20) }
+    assert(jobs.size <= 2, s"local branch ran ${jobs.size} Spark jobs")
+    val isLocal = (d: org.apache.spark.sql.DataFrame) =>
+      d.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(isLocal(local))
+    val want = ufComponents(edges)
+    assert(local.as[(Long, Long)].collect().toMap === want)
+    for (budget <- Seq(0L, 1L, 10L)) {
+      val loop = run(budget)
+      assert(!isLocal(loop), s"budget $budget should take the loop")
+      assert(loop.as[(Long, Long)].collect().toMap === want, s"budget $budget")
+    }
+    val exact = edges.map(e => (e._1 max e._2, e._1 min e._2)).distinct.size.toLong
+    assert(isLocal(run(exact)) && !isLocal(run(exact - 1)),
+      "the budget counts canonical edges: exactly at it stays local")
+  }
+
   test("null ids are dropped, extreme long ids survive the label algebra") {
     val big = Long.MaxValue - 1
     val df = Seq[(java.lang.Long, java.lang.Long)](

@@ -56,10 +56,11 @@ class LinkAnalysisSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("mega-hub edge-partitioning is invisible: bit-identical at any hubSplit") {
+  test("mega-hub lists spanning block records: bit-identical at any block budget") {
     // hub 0 fans out to 400 targets; background edges + back-edges keep
-    // the graph connected. Forcing tiny hubSplit slices the hub's
-    // adjacency into up to 400 records — ranks must not move by one unit.
+    // the graph connected. A small record budget cuts the hub's list
+    // across many block records (at 1, every list) — no operator's
+    // output may move by one unit.
     val rnd = new scala.util.Random(13)
     val hub = (1L to 400L).map(d => (0L, d))
     val back = Seq((1L, 0L), (200L, 0L))
@@ -67,12 +68,18 @@ class LinkAnalysisSpec extends SparkSpec {
         (rnd.nextInt(400).toLong + 1L, rnd.nextInt(400).toLong + 1L))
       .filter(e => e._1 != e._2)
     val df = (hub ++ back ++ bg).toDF("src", "dst")
-    val whole = LinkAnalysis.pageRank(df, "src", "dst")
-      .as[(Long, Long)].collect().toMap
+    def all() = Seq(
+      LinkAnalysis.pageRank(df, "src", "dst"),
+      LinkAnalysis.pageRank(df, "src", "dst", teleportSeeds = Seq(0L, 7L)),
+      LinkAnalysis.hits(df, "src", "dst"),
+      LinkAnalysis.kCore(df, "src", "dst", k = 2),
+      LinkAnalysis.bfsHops(df, "src", "dst", 1L, 3)
+    ).map(_.collect().toSet)
+    val whole = all()
+    assert(whole.forall(_.nonEmpty))
     for (s <- Seq(1, 7, 64)) {
-      val sliced = LinkAnalysis.pageRank(df, "src", "dst", hubSplit = s)
-        .as[(Long, Long)].collect().toMap
-      assert(sliced === whole, s"hubSplit=$s diverged")
+      val spanned = LinkAnalysis.blockEdges.withValue(s)(all())
+      assert(spanned === whole, s"blockEdges=$s diverged")
     }
   }
 
@@ -493,10 +500,10 @@ class LinkAnalysisSpec extends SparkSpec {
 
   test("DfLongHashPartitioner replays the DataFrame repartition(n, col) " +
     "layout exactly (the adjacency/loop co-partitioning contract)") {
-    // buildAdjLong places the adjacency with a DataFrame exchange and the
-    // fixed-point loops place their reduceByKey output with this RDD
-    // partitioner — any divergence between the two hash layouts silently
-    // breaks every zipPartitions probe, so pin them against each other on
+    // the graph build places the blocks with a DataFrame exchange and the
+    // fixed-point rounds route their messages with this RDD partitioner —
+    // any divergence between the two hash layouts silently sends sums to
+    // a partition that lacks their node, so pin them against each other on
     // keys exercising sign, parity, and magnitude.
     import org.apache.spark.sql.functions.{col, spark_partition_id}
     for (n <- Seq(1, 3, 7, 19)) {

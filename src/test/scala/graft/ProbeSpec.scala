@@ -182,46 +182,13 @@ class ProbeSpec extends SparkSpec {
     emb.filter($"vec_id" < 64).write.parquet(dir.resolve("queries").toString)
     val durable = AnnIvf.read(spark, dir.resolve("index").toString)
     val queries = spark.read.parquet(dir.resolve("queries").toString)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val seen = new java.util.concurrent.atomic.AtomicInteger
-    val tag = s"graft-probe-jobs-${System.nanoTime()}"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        seen.incrementAndGet()
-        if (js.properties != null &&
-            tag == js.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-        ()
-      }
-    }
-    // a sentinel job flushes the FIFO listener bus: once it is observed,
-    // every job started before it has been counted
-    def flush(): Unit = {
-      val base = seen.get()
-      spark.range(2).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (seen.get() == base && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(seen.get() > base, "listener never observed the sentinel job")
-    }
-    def count(f: => Any): Int = {
-      flush()
-      jobs.set(0)
-      spark.sparkContext.setJobGroup(tag, tag)
-      try f finally spark.sparkContext.clearJobGroup()
-      flush()
-      jobs.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val search = () => AnnIvf.searchPruned(durable, queries, "vec_id",
-        "embedding", k = 10, nprobe = 2).collect()
-      assert(search().nonEmpty) // warm
-      // collect the centroid table and the query batch, then one plan:
-      // scan → broadcast join → per-query top-k exchange → result. A probe
-      // job (a distinct collect) or a second probe plan adds to this.
-      val n = count(search())
-      assert(n <= 5, s"searchPruned ran $n Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val search = () => AnnIvf.searchPruned(durable, queries, "vec_id",
+      "embedding", k = 10, nprobe = 2).collect()
+    assert(search().nonEmpty) // warm
+    // collect the centroid table and the query batch, then one plan:
+    // scan → broadcast join → per-query top-k exchange → result. A probe
+    // job (a distinct collect) or a second probe plan adds to this.
+    val n = SpecUtil.jobsOf(spark)(search()).size
+    assert(n <= 5, s"searchPruned ran $n Spark jobs")
   }
 }

@@ -39,6 +39,41 @@ object SpecUtil {
     }
     leaked
   }
+
+  /** The properties of every Spark job `f` starts. Jobs are told apart
+    * by a job group set around `f`; a sentinel job flushes the FIFO
+    * listener bus before and after, so none is missed or misattributed. */
+  def jobsOf(spark: SparkSession)(f: => Any): Seq[java.util.Properties] = {
+    val sc = spark.sparkContext
+    val tag = s"graft-spec-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.incrementAndGet()
+        if (js.properties != null &&
+            tag == js.properties.getProperty("spark.jobGroup.id"))
+          jobs.add(js.properties)
+      }
+    }
+    def flush(): Unit = {
+      val base = seen.get()
+      spark.range(2).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.get() == base && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seen.get() > base, "listener never observed the sentinel job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      flush()
+      sc.setJobGroup(tag, tag)
+      try f finally sc.clearJobGroup()
+      flush()
+      import scala.jdk.CollectionConverters._
+      jobs.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
