@@ -340,11 +340,15 @@ object Graft {
   * `--conf spark.sql.extensions=graft.GraftExtensions` — the SQL-only
   * deployment path (Thrift server) where `Graft.register` cannot run.
   * The three Scala-UDF functions (graft_parse_taxontag, graft_lang_id,
-  * graft_simhash) exist only via `Graft.register`. */
+  * graft_simhash) exist only via `Graft.register`. It also plans the IVF
+  * serving operator (`ProbeTopKStrategy`), which the search entry points
+  * otherwise add to their session on first use. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     Graft.sqlFunctionBuilders.foreach { case (name, cls, builder) =>
       e.injectFunction((
         FunctionIdentifier(name), new ExpressionInfo(cls, name), builder))
     }
+    e.injectPlannerStrategy(_ => graft.operators.ProbeTopKStrategy)
+  }
 }

@@ -25,13 +25,14 @@ import graft.functions.VectorOps
   *
   * Spark realization: the partitioned Parquet table IS the index —
   * `partitionBy("partition_id")` gives partition pruning where the
-  * reference hand-rolls `local_{p}.index` files; the centroid table is a
-  * broadcast (it is `nlist × dim`, tiny by construction); tasks are the
-  * shard servers; union+window is the scatter-gather client. At 100 TB the
-  * only wide exchange is the one-time repartition on `partition_id` at
-  * build; every search touches `nprobe/nlist` of the data via
-  * `PartitionFilters` and keeps only k rows per query per partition before
-  * the final merge (window group-limit).
+  * reference hand-rolls `local_{p}.index` files; the centroid table is
+  * collected and probed on the driver (it is `nlist × dim`, tiny by
+  * construction); scan tasks are the shard servers, each keeping a
+  * k-bounded heap per query, and the driver's merge of those heaps is the
+  * scatter-gather client ([[ProbeTopK]]). At 100 TB the only wide exchange
+  * is the one-time repartition on `partition_id` at build; every search
+  * touches `nprobe/nlist` of the data via `PartitionFilters` and ships at
+  * most k rows per query per task to the merge.
   */
 object AnnIvf {
 
@@ -1088,17 +1089,25 @@ object AnnIvf {
   }
 
   /** One request's centroid probe, computed on the driver by
-    * [[probeQueries]]: `pairs` is a local relation (`query_id`,
+    * [[probeQueries]]: the collected (`query_id`, `__query_vec`) batch
+    * (`queryRows`, schema `querySchema`), the distinct probed partition
+    * ids ascending (`partitionIds`) with, aligned, the ascending indices
+    * into `queryRows` of the queries that probed each (`probing`), and
+    * `pairs`, the same probe as a local relation (`query_id`,
     * `partition_id`, `__query_vec`, `pscore`) of the top-`nprobe`
-    * partitions per query, `partitionIds` the distinct probed ids
-    * ascending, and `queryRows` the collected (`query_id`, `__query_vec`)
-    * batch. */
+    * partitions per query. */
   private[graft] final case class Probe(
-      pairs: DataFrame, partitionIds: Array[Int], queryRows: Array[Row]) {
+      spark: SparkSession, queryRows: Array[Row], querySchema: StructType,
+      partitionIds: Array[Int], probing: Array[Array[Int]],
+      pairRows: java.util.List[Row]) {
+    lazy val pairs: DataFrame = spark.createDataFrame(pairRows, StructType(Seq(
+      querySchema("query_id"),
+      StructField("partition_id", IntegerType, nullable = false),
+      querySchema("__query_vec"),
+      StructField("pscore", DoubleType, nullable = false))))
     /** The query batch as a local relation (`query_id`, `__query_vec`). */
-    def queries: DataFrame = pairs.sparkSession.createDataFrame(
-      java.util.Arrays.asList(queryRows: _*),
-      StructType(Seq(pairs.schema("query_id"), pairs.schema("__query_vec"))))
+    def queries: DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(queryRows: _*), querySchema)
   }
 
   /** Centroid probe shared by every serving search — the reference's
@@ -1140,25 +1149,27 @@ object AnnIvf {
       v
     }
     val out = new java.util.ArrayList[Row]()
-    val probed = new Array[Boolean](nlist)
+    // per centroid index: the queries that probed it, in query order
+    val probing = new Array[scala.collection.mutable.ArrayBuilder.ofInt](nlist)
     val np = math.max(0, math.min(nprobe, nlist))
     vecs.indices.grouped(CentroidGemm.BlockSize).foreach { block =>
       val (top, scores) =
         CentroidGemm.topProbes(block.map(vecs).toArray, flat, nlist, dim, np)
       var j = 0
       while (j < top.length) {
-        val r = rows(block(j / np))
+        val qi = block(j / np)
+        val r = rows(qi)
         out.add(Row(r.get(0), pids(top(j)), r.get(1), scores(j)))
-        probed(top(j)) = true
+        if (probing(top(j)) == null)
+          probing(top(j)) = new scala.collection.mutable.ArrayBuilder.ofInt
+        probing(top(j)) += qi
         j += 1
       }
     }
-    val schema = StructType(Seq(q.schema("query_id"),
-      StructField("partition_id", IntegerType, nullable = false),
-      q.schema("__query_vec"),
-      StructField("pscore", DoubleType, nullable = false)))
-    Probe(q.sparkSession.createDataFrame(out, schema),
-      pids.indices.filter(probed).map(pids).toArray, rows)
+    val probed = pids.indices.filter(probing(_) != null)
+    Probe(q.sparkSession, rows,
+      StructType(Seq(q.schema("query_id"), q.schema("__query_vec"))),
+      probed.map(pids).toArray, probed.map(probing(_).result()).toArray, out)
   }
 
   /** Partition-id → centroid array, driver-resident (the leader table is
@@ -1179,18 +1190,34 @@ object AnnIvf {
       nprobe, "AnnIvf.probePartitions")
       .pairs.select("query_id", "partition_id")
 
-  /** ANN search: probe → pruned per-partition exact top-k → global merge.
+  /** ANN search: driver probe → one fused scan of the probed partitions
+    * → per-query top-k ([[ProbeTopK]]).
     *
     * With `nprobe = nlist` this is exact (equals brute force) — the
-    * property test in AnnIvfSpec. Queries are broadcast (serving contract:
-    * the query batch is small; the corpus is the 100 TB side).
+    * property test in AnnIvfSpec. Queries stay on the driver (serving
+    * contract: the query batch is small; the corpus is the 100 TB side):
+    * the probe's partition list becomes a static `partition_id` filter on
+    * `index.assigned` (parquet `PartitionFilters` on a durable index), and
+    * each scan task scores a row only against the queries that probed its
+    * partition, keeping a k-bounded heap per query. A `collect` merges the
+    * task heaps on the driver: one scan job, no broadcast, no exchange, no
+    * sort. Output: `partition_id`, `query_id`, the candidate columns,
+    * `score`, `rank`; ties in `score` rank by ascending `idCol`.
+    *
+    * With `perPartitionK > 0` the REFERENCE contract is reproduced
+    * literally: top-`perPartitionK` within each probed partition first
+    * (server-side top_n, neighborhood_server.py:209-216), then the global
+    * cap (client truncation, nearest_neighbor_client.py:70-72) — so a
+    * query sees at most nprobe·perPartitionK candidates.
     *
     * `candidateFilter` is PRE-FILTERED vector search: the predicate (over
     * the candidate row — metadata columns, id, and `query_id` are all in
     * scope) is applied inside the probed partitions BEFORE scoring and
     * top-k, so the k results all satisfy it (post-filtering top-k instead
-    * returns < k rows whenever the filter bites). Selective filters thin
-    * the per-cell candidate pool — serve them with a higher nprobe (at
+    * returns < k rows whenever the filter bites). Conjuncts that read no
+    * query column run once per candidate row, below the operator; the
+    * rest run per (candidate, query) pair. Selective filters thin the
+    * per-cell candidate pool — serve them with a higher nprobe (at
     * nprobe = nlist the result is exactly brute-force-over-the-filtered-
     * corpus, which is what makes `ann_filtered_search` oracle-checkable). */
   def search(
@@ -1203,36 +1230,21 @@ object AnnIvf {
       idCol: String = "vec_id",
       perPartitionK: Int = 0,
       candidateFilter: Column = lit(true),
-      score: (Column, Column) => Column = VectorOps.dot(_, _)): DataFrame = {
+      score: (Column, Column) => Column = VectorOps.dot(_, _)): DataFrame =
+    serve(index, queries, queryIdCol, vecCol, k, nprobe, idCol, perPartitionK,
+      candidateFilter, score, "AnnIvf.search")
+
+  private def serve(index: Index, queries: DataFrame, queryIdCol: String,
+      vecCol: String, k: Int, nprobe: Int, idCol: String, perPartitionK: Int,
+      candidateFilter: Column, score: (Column, Column) => Column,
+      caller: String): DataFrame = {
     val q = queries.select(
       col(queryIdCol).as("query_id"), col(vecCol).as("__query_vec"))
-
-    // 1. centroid probe (J2): top-nprobe partitions/query, on the driver.
-    val probed = probeQueries(index, q, nprobe, "AnnIvf.search").pairs.drop("pscore")
-
-    // 2. pruned candidate join (J3/P4): equi-join on partition_id; on the
-    // durable layout this hits Parquet PartitionFilters. The membership
-    // filter runs here — before any dot product is computed.
-    val cands = broadcast(probed)
-      .join(index.assigned, Seq("partition_id"))
-      .filter(candidateFilter)
-
-    // 3. per-query exact top-k + hierarchical merge (W1/W2/T2) in one
-    // group-limit window. With perPartitionK > 0 the REFERENCE contract is
-    // reproduced literally: top-perPartitionK within each probed partition
-    // first (server-side top_n, neighborhood_server.py:209-216), then the
-    // global cap (client truncation, nearest_neighbor_client.py:70-72) —
-    // so a query can see at most nprobe·perPartitionK candidates.
-    val scored = cands.withColumn("score",
-      score(col(vecCol), col("__query_vec")))
-    val candidates =
-      if (perPartitionK > 0)
-        Knn.topKPerGroup(scored, Seq(col("query_id"), col("partition_id")),
-          perPartitionK, desc("score"), asc(idCol)).drop("rank")
-      else scored
-    Knn.topKPerGroup(candidates,
-      Seq(col("query_id")), k, desc("score"), asc(idCol))
-      .drop("__query_vec", "__salt")
+    val probe = probeQueries(index, q, nprobe, caller)
+    val pruned = index.assigned
+      .filter(col("partition_id").isin(probe.partitionIds.toSeq: _*))
+    ProbeTopK(pruned, probe, idCol, vecCol, k, perPartitionK, candidateFilter,
+      score, "ann search: scan+top-k")
   }
 
   /** Range search: ALL neighbors with score ≥ `minScore` within the
@@ -1241,9 +1253,9 @@ object AnnIvf {
     * top-k, neighborhood_server.py:209-216, so a "give me everything at
     * least this similar" caller must over-fetch k and re-filter). Output
     * size is data-dependent, not k-bounded — the probe keeps it ∝
-    * nprobe/nlist of the corpus, and there is no window: a threshold scan
+    * nprobe/nlist of the corpus, and there is no ranking: a threshold scan
     * needs no per-query ordering, so the plan is probe → pruned join →
-    * filter, one shuffle fewer than [[search]].
+    * filter.
     *
     * At nprobe = nlist this is exact (equals a brute-force threshold
     * join) — which is what makes `knn_range_search` oracle-checkable. */
@@ -1301,17 +1313,16 @@ object AnnIvf {
   }
 
   /** Serving-path search against a DURABLE (partitioned-parquet) index:
-    * the probe step runs first and its partition list becomes a STATIC
-    * `isin` predicate, so the candidate scan is metadata-only partition
-    * pruning (`PartitionFilters` — no file of an unprobed partition is
-    * even listed). This is the 100 TB read path: cost ∝ nprobe/nlist of
-    * the corpus, like the reference's `local_{p}.index` loads
-    * (neighborhood_server.py:209-224) but without a serving tier.
-    *
-    * The probe runs on the driver before the plan is built
-    * ([[probeQueries]]), so the partition list is known up front — the
-    * same "leader search first" sequencing the reference does, with no
-    * Spark job for the probe itself. */
+    * [[search]] with the inner-product score. The probe runs on the driver
+    * first ([[probeQueries]] — the reference's "leader search first"
+    * sequencing, with no Spark job for the probe itself), and its
+    * partition list becomes a STATIC `isin` predicate, so the candidate
+    * scan is metadata-only partition pruning (`PartitionFilters` — no file
+    * of an unprobed partition is even listed). This is the 100 TB read
+    * path: cost ∝ nprobe/nlist of the corpus, like the reference's
+    * `local_{p}.index` loads (neighborhood_server.py:209-224) but without
+    * a serving tier. A `collect` runs one scan job; over a durable index
+    * the request also collects the centroid table and the query batch. */
   def searchPruned(
       index: Index,
       queries: DataFrame,
@@ -1320,21 +1331,9 @@ object AnnIvf {
       k: Int,
       nprobe: Int,
       idCol: String = "vec_id",
-      candidateFilter: Column = lit(true)): DataFrame = {
-    val q = queries.select(
-      col(queryIdCol).as("query_id"), col(vecCol).as("__query_vec"))
-    val probe = probeQueries(index, q, nprobe, "AnnIvf.searchPruned")
-    val prunedVectors = index.assigned
-      .filter(col("partition_id").isin(probe.partitionIds.toSeq: _*))
-    val cands = broadcast(probe.pairs.drop("pscore"))
-      .join(prunedVectors, Seq("partition_id"))
-      .filter(candidateFilter)
-    Knn.topKPerGroup(
-      cands.withColumn("score",
-        VectorOps.dot(col(vecCol), col("__query_vec"))),
-      Seq(col("query_id")), k, desc("score"), asc(idCol))
-      .drop("__query_vec", "__salt")
-  }
+      candidateFilter: Column = lit(true)): DataFrame =
+    serve(index, queries, queryIdCol, vecCol, k, nprobe, idCol, 0,
+      candidateFilter, VectorOps.dot(_, _), "AnnIvf.searchPruned")
 
   /** Corpus×corpus KNN join: top-k neighbors for EVERY indexed vector —
     * the batch shape of similarity search (each training document gets its
@@ -1478,10 +1477,25 @@ object AnnIvf {
       .select(col("partition_id"), col("__sb").cast("int").as("__sb"),
         col("id").as("left_id"), col("vec").as("left_vec"))
       .repartition(parts, col("partition_id"), col("__sb"))
-    left.join(right, Seq("partition_id", "__sb"))
-      .filter(col("left_id") < col("right_id"))
-      .withColumn("score", round(VectorOps.dot(col("left_vec"), col("right_vec")), 6))
-      .filter(col("score") >= threshold)
+    atLeastRounded(
+      left.join(right, Seq("partition_id", "__sb"))
+        .filter(col("left_id") < col("right_id")),
+      VectorOps.dot(col("left_vec"), col("right_vec")), threshold)
       .select("left_id", "right_id", "score")
   }
+
+  /** `pairs` with `score = round(raw, 6)`, keeping `score >= threshold`.
+    * Rounding a double goes through its decimal string, so the raw value
+    * is pre-filtered first with a superset of the result: a `raw` below
+    * `threshold − 1e-6` rounds to at most `raw + 5e-7`, still below
+    * `threshold`. Only the pairs that pass are rounded; the rows kept are
+    * exactly those of the rounded filter alone (NaN passes both, as it
+    * compares above every value). */
+  private[graft] def atLeastRounded(pairs: DataFrame, raw: Column,
+      threshold: Double): DataFrame =
+    pairs.withColumn("__raw", raw)
+      .filter(col("__raw") >= threshold - 1e-6)
+      .withColumn("score", round(col("__raw"), 6))
+      .filter(col("score") >= threshold)
+      .drop("__raw")
 }

@@ -172,15 +172,6 @@ object LinkAnalysis {
     }
   }
 
-  /** Runs `body` with its Spark jobs described as `label` (what the UI
-    * and listeners show per job), restoring the caller's description. */
-  private def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(label)
-    try body finally sc.setJobDescription(prev)
-  }
-
   /** How result ids map back to the caller's: integral ids run as longs
     * and are cast back to `nodeType`; any other type is encoded through
     * `dict` (node, id) — checkpointed once, so ids stay stable — and
@@ -460,7 +451,7 @@ object LinkAnalysis {
     val spark = edges.sparkSession
     val (e, ids) = encode(edges, srcCol, dstCol)
     val fields = Seq(StructField("pr", LongType, nullable = false))
-    val g = labelled(spark, "pagerank build")(
+    val g = labelled(spark.sparkContext, "pagerank build")(
       buildGraph(e, directed = true, withIn = false))
     if (g == null) return ids.empty(spark, fields)
     // distinct BEFORE sizing: counting duplicate seeds would dilute every
@@ -468,7 +459,7 @@ object LinkAnalysis {
     val wanted = teleportSeeds.distinct
     val resolved = ids.resolve(wanted)
     val probe = resolved.values.toArray.sorted
-    val counted = labelled(spark, "pagerank nodes")(g.blocks.map { b =>
+    val counted = labelled(spark.sparkContext, "pagerank nodes")(g.blocks.map { b =>
       (b.nodes.length - (if (b.cont) 1L else 0L),
         b.nodes.filter(java.util.Arrays.binarySearch(probe, _) >= 0))
     }.collect())
@@ -498,7 +489,7 @@ object LinkAnalysis {
     val rows = nodeRows(g, Option(insum).toSeq: _*) { (x, j, s) =>
       Row(x, if (s.isEmpty) (if (isSeed(x)) init else 0L) else rank(x, s.head(j)))
     }
-    val out = labelled(spark, s"pagerank r1-$iterations: rank")(
+    val out = labelled(spark.sparkContext, s"pagerank r1-$iterations: rank")(
       output(spark, rows, ids, fields))
     g.blocks.unpersist(blocking = false)
     ids.release()
@@ -547,14 +538,14 @@ object LinkAnalysis {
     val (e, ids) = encode(edges, srcCol, dstCol)
     val fields = Seq(StructField("auth", LongType, nullable = false),
       StructField("hub", LongType, nullable = false))
-    val g = labelled(spark, "hits build")(
+    val g = labelled(spark.sparkContext, "hits build")(
       buildGraph(e, directed = true, withIn = true))
     if (g == null) return ids.empty(spark, fields)
     val live = ArrayBuffer.empty[RDD[Array[Long]]]
     // raw = Σ over the lists of the partner's max-normed score (uniform
     // on round 1), persisted; returns it with its max
     def half(label: String, partner: RDD[Array[Long]], pMax: Long,
-        in: Boolean): (RDD[Array[Long]], Long) = labelled(spark, label) {
+        in: Boolean): (RDD[Array[Long]], Long) = labelled(spark.sparkContext, label) {
       val raw = gather(g, null, scatter(g, partner, in) { (_, s, j) =>
         if (s == null) ScaleHits else s(j) * ScaleHits / pMax
       })((_, x) => x).persist(StorageLevel.MEMORY_AND_DISK)
@@ -582,7 +573,7 @@ object LinkAnalysis {
     val rows = nodeRows(g, auth, hub) { (x, j, s) =>
       Row(x, s(0)(j) * ScaleHits / am, s(1)(j) * ScaleHits / hm)
     }
-    val out = labelled(spark, "hits output")(output(spark, rows, ids, fields))
+    val out = labelled(spark.sparkContext, "hits output")(output(spark, rows, ids, fields))
     (live :+ g.blocks).foreach(_.unpersist(blocking = false))
     ids.release()
     out
@@ -624,7 +615,7 @@ object LinkAnalysis {
     val spark = pairs.sparkSession
     val (e, ids) = encode(pairs, leftCol, rightCol)
     val fields = Seq(StructField("core_degree", LongType, nullable = false))
-    val g = labelled(spark, "kcore build")(
+    val g = labelled(spark.sparkContext, "kcore build")(
       buildGraph(e, directed = false, withIn = false))
     if (g == null) return ids.empty(spark, fields)
     val peelable = (d: Long) => d >= 0L && d < k
@@ -634,7 +625,7 @@ object LinkAnalysis {
     while (pending != 0L && round < maxIter) {
       round += 1
       val prev = live
-      live = labelled(spark, s"kcore r$round: peel") {
+      live = labelled(spark.sparkContext, s"kcore r$round: peel") {
         // decrements aimed at nodes leaving in the same round vanish
         val next = gather(g, prev, scatter(g, prev, in = false)(
             (_, s, j) => if (peelable(s(j))) 1L else 0L))(
@@ -655,7 +646,7 @@ object LinkAnalysis {
     val rows = nodeRows(g, live) { (x, j, s) =>
       if (s.head(j) >= 1L) Row(x, s.head(j)) else null
     }
-    val out = labelled(spark, "kcore output")(output(spark, rows, ids, fields))
+    val out = labelled(spark.sparkContext, "kcore output")(output(spark, rows, ids, fields))
     g.blocks.unpersist(blocking = false)
     live.unpersist(blocking = false)
     ids.release()
@@ -694,7 +685,7 @@ object LinkAnalysis {
     val ids = if (encoded.dict == null) encoded.copy(nodeType = LongType) else encoded
     val fields = Seq(StructField("dist", IntegerType, nullable = false))
     val src = ids.resolve(Seq(source)).values.headOption
-    val g = if (src.isEmpty) null else labelled(spark, "bfs build")(
+    val g = if (src.isEmpty) null else labelled(spark.sparkContext, "bfs build")(
       buildGraph(e, directed = false, withIn = false))
     if (g == null) return ids.empty(spark, fields)
     val s0 = src.get
@@ -704,7 +695,7 @@ object LinkAnalysis {
     while (frontier != 0L && hop < maxHops) {
       hop += 1
       val (h, prev) = (hop.toLong, dist)
-      dist = labelled(spark, s"bfs hop $hop") {
+      dist = labelled(spark.sparkContext, s"bfs hop $hop") {
         val next = gather(g, prev, scatter(g, prev, in = false)(
             (_, s, j) => if (s(j) == h - 1) 1L else 0L))(
             (d, reached) => if (d < 0L && reached > 0L) h else d)
@@ -718,7 +709,7 @@ object LinkAnalysis {
     val rows = nodeRows(g, dist) { (x, j, s) =>
       if (s.head(j) >= 0L) Row(x, s.head(j).toInt) else null
     }
-    val out = labelled(spark, "bfs output")(output(spark, rows, ids, fields))
+    val out = labelled(spark.sparkContext, "bfs output")(output(spark, rows, ids, fields))
     g.blocks.unpersist(blocking = false)
     dist.unpersist(blocking = false)
     ids.release()

@@ -21,7 +21,9 @@ import org.apache.spark.util.LongAccumulator
   * Cache decisions are driver-side: the centroid probe runs on the
   * driver ([[AnnIvf.probeQueries]], as in [[AnnIvf.searchPruned]] — the
   * reference's "leader search first" sequencing), so the probed
-  * partition set is known before any plan is built. Concurrency: the
+  * partition set is known before any plan is built; the resident and
+  * overflow partitions are then read by one [[ProbeTopK]] scan, the
+  * operator every IVF search runs. Concurrency: the
   * cache monitor guards only the LRU map itself; a COLD load (persist +
   * optional eager count job — seconds on a big partition) runs outside
   * it behind a per-partition gate, so a cold query never blocks
@@ -103,17 +105,21 @@ final class ServingCache(val index: AnnIvf.Index, val maxCachedPartitions: Int,
     }
   }
 
-  /** [[AnnIvf.searchPruned]] semantics served from the cache: probe,
-    * load/touch each probed partition, exact top-k over their union.
-    * Result equality with the uncached path is spec-checked. */
+  /** [[AnnIvf.searchPruned]] semantics served from the cache: probe on
+    * the driver, load/touch each probed partition, then one
+    * [[ProbeTopK]] scan of their union — each row scored only against
+    * the queries that probed its partition, per-query heaps merged on the
+    * driver. A warm request whose partitions are all resident runs one
+    * job (labelled `ann cache search: scan+top-k`) beyond collecting the
+    * query batch; an empty probe runs none. Columns: `query_id`,
+    * `partition_id`, the candidate columns, `score`, `rank`. Result
+    * equality with the uncached path is spec-checked. */
   def search(queries: DataFrame, queryIdCol: String, vecCol: String,
       k: Int, nprobe: Int, idCol: String = "vec_id"): DataFrame = {
     val q = queries.select(
       col(queryIdCol).as("query_id"), col(vecCol).as("__query_vec"))
     val probe = AnnIvf.probeQueries(index, q, nprobe, "ServingCache.search")
     val pids = probe.partitionIds
-    if (pids.isEmpty) return AnnIvf.searchPruned(
-      index, queries, queryIdCol, vecCol, k, nprobe, idCol)
     // resident-first capacity split — the overflow of a wide probe set
     // goes to one direct pruned scan instead of churning the LRU (see
     // class doc); reading keySet does not bump access order
@@ -129,19 +135,15 @@ final class ServingCache(val index: AnnIvf.Index, val maxCachedPartitions: Int,
       if (direct.isEmpty) Nil
       else Seq(index.assigned.filter(
         col("partition_id").isin(direct.toSeq: _*)))
+    // no probed partition: an empty candidate frame, which the operator
+    // answers without a job
     val cands = (viaCache.map(partitionDf).toSeq ++ directScan)
-      .reduce(_.unionByName(_))
-    // broadcast the SMALL things separately: the (query, partition)
-    // pairs and the query vectors ONCE each — not the probe result with
-    // a query-vector copy per probed partition (nprobe× the bytes)
-    val pairs = probe.pairs.select("query_id", "partition_id")
-    Knn.topKPerGroup(
-      broadcast(pairs).join(cands, Seq("partition_id"))
-        .join(broadcast(probe.queries), Seq("query_id"))
-        .withColumn("score",
-          graft.functions.VectorOps.dot(col(vecCol), col("__query_vec"))),
-      Seq(col("query_id")), k, desc("score"), asc(idCol))
-      .drop("__query_vec", "__salt")
+      .reduceOption(_.unionByName(_))
+      .getOrElse(index.assigned.filter(lit(false)))
+    val top = ProbeTopK(cands, probe, idCol, vecCol, k, 0, lit(true),
+      graft.functions.VectorOps.dot(_, _), "ann cache search: scan+top-k")
+    val rest = top.columns.filterNot(c => c == "query_id" || c == "partition_id")
+    top.select((Seq("query_id", "partition_id") ++ rest).map(col): _*)
   }
 
   /** One stats row — the cache half of the reference's `/health`. */

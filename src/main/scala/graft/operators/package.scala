@@ -5,6 +5,15 @@ import org.apache.spark.sql.types._
 
 package object operators {
 
+  /** Runs `body` with its Spark jobs described as `label` (what the UI
+    * and listeners show per job), restoring the caller's description. */
+  private[graft] def labelled[T](sc: org.apache.spark.SparkContext, label: String)(
+      body: => T): T = {
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
+  }
+
   /** Deterministically release a checkpointed Dataset's storage.
     * `Dataset.unpersist` is a NO-OP here — it only clears CacheManager
     * entries, while `localCheckpoint` persists the underlying RDD

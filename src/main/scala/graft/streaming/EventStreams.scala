@@ -580,8 +580,9 @@ object EventStreams {
     * a frozen index — the reference's scatter-gather request loop
     * (nearest_neighbor_client.py:34-72) as a stream instead of an HTTP
     * client. Each arriving batch runs the exact batch serving plan
-    * (centroid probe → pruned candidate join → per-query group-limit
-    * top-k) via `foreachBatch`, because a per-query rank is not
+    * (driver centroid probe → one fused scan with per-query top-k heaps,
+    * [[graft.operators.ProbeTopK]]) via `foreachBatch`, because a
+    * per-query rank is not
     * expressible in append-mode streaming — and per batch it SHOULD be
     * the batch plan: the index stays frozen, only the query set moves.
     * `sink` receives each batch's results with the batch id;

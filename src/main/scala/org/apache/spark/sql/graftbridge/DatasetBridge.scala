@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** Bridge to `private[sql]` Dataset constructors.
@@ -22,6 +23,11 @@ object DatasetBridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** A DataFrame over a hand-built logical plan (a library's own node). */
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** localCheckpoint `df` (lazy by default — materialization folds into
     * the first consuming action instead of costing one job per call, the

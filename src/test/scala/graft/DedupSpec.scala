@@ -125,6 +125,29 @@ class DedupSpec extends SparkSpec {
     assert(salted === exact)
   }
 
+  test("cosinePairsViaIndex: the raw pre-filter keeps exactly the rows of round(dot, 6) >= threshold") {
+    // values around each threshold ± 5e-7 (the rounding boundary) and
+    // ± 1e-6 (the pre-filter's margin), each ± up to 2 ulps, plus the
+    // non-finite and null scores
+    val thresholds = Seq(0.99, 0.35, 0.5, 0.123456, -0.3, 0.9999995, 1.0)
+    val values = thresholds.flatMap { t =>
+      for (d <- Seq(0.0, 5e-7, -5e-7, 1e-6, -1e-6, 1.5e-6, -1.5e-6);
+           u <- -2 to 2) yield {
+        val x = t + d
+        if (u >= 0) (0 until u).foldLeft(x)((v, _) => math.nextUp(v))
+        else (0 until -u).foldLeft(x)((v, _) => math.nextDown(v))
+      }
+    } ++ Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val xs = (values.map(v => Option(v)) :+ None).toDF("x")
+    for (t <- thresholds) {
+      val old = xs.withColumn("score", round($"x", 6)).filter($"score" >= t)
+      val got = graft.operators.AnnIvf.atLeastRounded(xs, $"x", t)
+      assert(got.schema === old.schema)
+      assert(got.collect().map(_.toString).sorted === old.collect().map(_.toString).sorted,
+        s"threshold $t")
+    }
+  }
+
   test("cosinePairsViaIndex: partitions above maxPartitionRows are excluded") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val index = graft.operators.AnnIvf.build(emb, "vec_id", "embedding", nlist = 1, seed = 42L)

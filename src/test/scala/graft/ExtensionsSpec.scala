@@ -50,6 +50,11 @@ class ExtensionsSpec extends AnyFunSuite {
         .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
         .mkString(" | ")
       assert(msgs.contains("expects exactly 2"), msgs)
+      // the IVF serving operator is planned without its first-use setup
+      assert(fresh.sessionState.planner.strategies
+        .contains(graft.operators.ProbeTopKStrategy))
+      assert(!fresh.experimental.extraStrategies
+        .contains(graft.operators.ProbeTopKStrategy))
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)

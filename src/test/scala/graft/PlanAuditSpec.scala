@@ -151,8 +151,8 @@ class PlanAuditSpec extends SparkSpec {
     // the label predicate must appear in a Filter condition (pre-scoring
     // candidate filter — FilteredSearchSpec proves the semantics; this
     // pins that it stayed a plan-level filter rather than a UDF or a
-    // post-top-k trim), alongside the usual group-limit serving shape
-    assert(p.contains("WindowGroupLimit"), p.take(600))
+    // post-top-k trim), below the fused ProbeTopK serving operator
+    assert(p.contains("ProbeTopK"), p.take(600))
     assert("Condition.*label.* = 2".r.findFirstIn(p).isDefined ||
       p.contains("(label"), p.take(1200))
   }

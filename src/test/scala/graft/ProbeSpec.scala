@@ -185,10 +185,38 @@ class ProbeSpec extends SparkSpec {
     val search = () => AnnIvf.searchPruned(durable, queries, "vec_id",
       "embedding", k = 10, nprobe = 2).collect()
     assert(search().nonEmpty) // warm
-    // collect the centroid table and the query batch, then one plan:
-    // scan → broadcast join → per-query top-k exchange → result. A probe
-    // job (a distinct collect) or a second probe plan adds to this.
-    val n = SpecUtil.jobsOf(spark)(search()).size
-    assert(n <= 5, s"searchPruned ran $n Spark jobs")
+    // collect the centroid table and the query batch, then ONE scan job:
+    // the fused scan → score → per-query top-k, merged on the driver. A
+    // probe job, a broadcast of the probe pairs or a top-k exchange adds
+    // to this.
+    val sc = spark.sparkContext
+    var after: String = null
+    val jobs = SpecUtil.jobStatsOf(spark) {
+      sc.setJobDescription("caller")
+      search()
+      after = sc.getLocalProperty("spark.job.description")
+    }
+    assert(after === "caller", "the caller's job description was not restored")
+    val n = jobs.props.size
+    assert(n <= 3, s"searchPruned ran $n Spark jobs")
+    assert(jobs.shuffleBytes === 0L, "the search shuffled")
+    val labels = jobs.props.map(_.getProperty("spark.job.description"))
+    assert(labels.count(_ == "ann search: scan+top-k") === 1, labels.mkString(", "))
+  }
+
+  test("a warm ServingCache.search with every probed partition resident runs one scan job") {
+    val cache = new ServingCache(index, maxCachedPartitions = 8)
+    // a local query batch: collecting it runs no job
+    val q = spark.createDataFrame(
+      java.util.Arrays.asList(emb.filter($"vec_id" < 16).collect(): _*), emb.schema)
+    val search = () => cache.search(q, "vec_id", "embedding", k = 10, nprobe = 3).collect()
+    assert(search().nonEmpty) // loads the probed partitions
+    val (hits, misses) = (cache.hits.value, cache.misses.value)
+    val jobs = SpecUtil.jobStatsOf(spark)(search())
+    assert(cache.misses.value === misses, "a warm search loaded a partition")
+    assert(cache.hits.value > hits)
+    val labels = jobs.props.map(_.getProperty("spark.job.description"))
+    assert(labels === Seq("ann cache search: scan+top-k"), labels.mkString(", "))
+    assert(jobs.shuffleBytes === 0L, "the cached search shuffled")
   }
 }

@@ -40,22 +40,40 @@ object SpecUtil {
     leaked
   }
 
-  /** The properties of every Spark job `f` starts. Jobs are told apart
-    * by a job group set around `f`; a sentinel job flushes the FIFO
-    * listener bus before and after, so none is missed or misattributed. */
-  def jobsOf(spark: SparkSession)(f: => Any): Seq[java.util.Properties] = {
+  /** What the Spark jobs `f` starts did: each job's properties, and the
+    * shuffle bytes their tasks wrote. */
+  final case class Jobs(props: Seq[java.util.Properties], shuffleBytes: Long)
+
+  /** The properties of every Spark job `f` starts. */
+  def jobsOf(spark: SparkSession)(f: => Any): Seq[java.util.Properties] =
+    jobStatsOf(spark)(f).props
+
+  /** [[Jobs]] of `f`. Jobs are told apart by a job group set around `f`
+    * (the caller's job description is restored after it); a sentinel job
+    * flushes the FIFO listener bus before and after, so none is missed or
+    * misattributed. */
+  def jobStatsOf(spark: SparkSession)(f: => Any): Jobs = {
     val sc = spark.sparkContext
     val tag = s"graft-spec-jobs-${System.nanoTime()}"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
     val seen = new java.util.concurrent.atomic.AtomicInteger
+    def ours(props: java.util.Properties) =
+      props != null && tag == props.getProperty("spark.jobGroup.id")
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         seen.incrementAndGet()
-        if (js.properties != null &&
-            tag == js.properties.getProperty("spark.jobGroup.id"))
-          jobs.add(js.properties)
+        if (ours(js.properties)) jobs.add(js.properties)
       }
+      override def onStageSubmitted(
+          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (ours(ss.properties)) stages.add(ss.stageInfo.stageId)
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId) && te.taskMetrics != null)
+          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
     def flush(): Unit = {
       val base = seen.get()
@@ -67,11 +85,15 @@ object SpecUtil {
     sc.addSparkListener(listener)
     try {
       flush()
+      val description = sc.getLocalProperty("spark.job.description")
       sc.setJobGroup(tag, tag)
-      try f finally sc.clearJobGroup()
+      try f finally {
+        sc.clearJobGroup()
+        sc.setJobDescription(description)
+      }
       flush()
       import scala.jdk.CollectionConverters._
-      jobs.asScala.toSeq
+      Jobs(jobs.asScala.toSeq, shuffleBytes.get())
     } finally sc.removeSparkListener(listener)
   }
 }
