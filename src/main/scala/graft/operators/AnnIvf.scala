@@ -70,10 +70,6 @@ object AnnIvf {
       }
     }.toSeq.distinct.sorted
 
-  /** Train k-means on a bounded sample (the reference trains on a
-    * `50·nlist` prefix, storage_impl.py:83; we sample for better statistics
-    * — SURVEY.md §4) and assign every vector to its nearest centroid.
-    * Assignment is a single broadcast pass, no shuffle. */
   /** Local-training cost is O(points · k · dim · iters) single-threaded,
     * so the driver-local Lloyd's path is only right when points·k is small
     * — NOT merely when the sample is small (a 70k-point, k=1414 sample is
@@ -86,6 +82,19 @@ object AnnIvf {
     * [[read]], and [[merge]] (every way an Index enters a session). */
   val ServeNlistCap: Int = 1 << 20
 
+  /** Train k-means on a bounded sample (the reference trains on a
+    * `50·nlist` prefix, storage_impl.py:83; we sample for better statistics
+    * — SURVEY.md §4) and assign every vector to its nearest centroid.
+    *
+    * The returned [[Index.assigned]] is the LAZY assignment pass: a
+    * mapPartitions over `vectors` that scores every vector against every
+    * centroid. Nothing is cached, so every [[search]] / [[searchPruned]] /
+    * [[ServingCache]] call over the built index re-reads and re-assigns
+    * the whole corpus before its `partition_id` filter can drop a row
+    * (a [[write]]/[[read]] index is unaffected: there `partition_id` is a
+    * parquet partition column). A caller that serves from a built index
+    * should persist `assigned` first, as the benchmark's `corpus_curate`
+    * set-up does. */
   def build(
       vectors: DataFrame,
       idCol: String,
@@ -93,10 +102,9 @@ object AnnIvf {
       nlist: Int,
       seed: Long = 42L,
       trainSize: Int = 0): Index = {
-    // the centroid table is collected to the driver and broadcast on every
-    // probe (LocalTableScan build side of the probe theta-join): 2²⁰
-    // centers × 64-d floats ≈ 270 MB is the ceiling of that design — the
-    // same bound PlanAuditSpec's join sweep enforces at the plan level
+    // the centroid table is collected to the driver by every search's
+    // probe (AnnIvf.probeQueries scores it there): 2²⁰ centers × 64-d
+    // floats ≈ 270 MB is the ceiling of that design
     require(nlist >= 1 && nlist <= ServeNlistCap,
       s"nlist=$nlist outside [1, $ServeNlistCap] — the centroid table " +
         "must stay driver-collectable/broadcastable")

@@ -38,11 +38,63 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** Every i<j pair of members that share a bucket — the candidate step
+    * of the banded dedup family ([[minhashPairs]], [[hamming64Pairs]],
+    * [[winnowCandidates]]).
+    *
+    * A bucket is one value of `keyCols`; its members are its rows with a
+    * non-null `idCol`. Buckets with fewer than 2 or more than
+    * `maxBucketSize` members emit nothing. A degenerate key (boilerplate,
+    * empty docs, a constant signature chunk) carries no near-dup signal
+    * worth O(bucket²) pairs — standard LSH practice. The cap is applied
+    * BEFORE any member list is built: a `count` window over the bucket
+    * key sizes each bucket, a Filter drops the over-cap ones, and only
+    * the survivors reach the `collect_list` aggregate. The window buffer
+    * spills, so a corpus-sized bucket costs a sort, never a single-task
+    * in-memory list; the expansion holds at most `maxBucketSize` members
+    * and emits at most maxBucketSize²/2 pairs per bucket. Window and
+    * aggregate share ONE exchange on the bucket key.
+    *
+    * @param pairParallelism explicit width of that exchange (a
+    *   `repartition` on the key), 0 = the planner's; see
+    *   [[hamming64Pairs]] for when to opt in.
+    * @return (left_id, right_id: long, then left_p, right_p for each
+    *   payload column p), members ordered by id. One row per pair per
+    *   shared bucket: a pair that shares k buckets appears k times. */
+  private[graft] def bucketPairs(
+      banded: DataFrame,
+      keyCols: Seq[String],
+      idCol: String,
+      payloadCols: Seq[String],
+      maxBucketSize: Int,
+      pairParallelism: Int = 0): DataFrame = {
+    val keys = keyCols.map(col)
+    val members = banded.filter(col(idCol).isNotNull)
+    val pre =
+      if (pairParallelism > 0) members.repartition(pairParallelism, keys: _*)
+      else members
+    val fields = "id" +: payloadCols
+    pre
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(keys: _*)))
+      .filter(col("__n") > 1 && col("__n") <= maxBucketSize)
+      .groupBy(keys: _*)
+      .agg(array_sort(collect_list(struct(col(idCol).cast("long").as("id") +:
+        payloadCols.map(col): _*))).as("__ms"))
+      // member i pairs with every later member: the array's suffix
+      // after position i (slice is 1-based)
+      .select(posexplode(col("__ms")).as(Seq("__i", "__l")), col("__ms"))
+      .select(col("__l"), explode(slice(col("__ms"), col("__i") + 2,
+        size(col("__ms")) - col("__i") - 1)).as("__r"))
+      .select(fields.flatMap(f =>
+        Seq(col(s"__l.$f").as(s"left_$f"), col(s"__r.$f").as(s"right_$f"))): _*)
+  }
+
   /** MinHash-LSH near-dup pairs, exact-verified with shingle Jaccard.
     *
-    * shingle → minhash(numPerms) → band keys → explode → self-join on band
-    * key (the bucket join) → distinct candidate pair → exact Jaccard ≥
-    * threshold. Pair space is bounded by bucket sizes, not n².
+    * shingle → minhash(numPerms) → band keys → [[bucketPairs]] (the
+    * bucket join, degenerate bands capped) → distinct candidate pair →
+    * exact Jaccard ≥ threshold. Pair space is bounded by bucket sizes,
+    * not n².
     */
   def minhashPairs(
       docs: DataFrame,
@@ -53,6 +105,9 @@ object Dedup {
       rowsPerBand: Int = 4,
       threshold: Double = 0.6,
       maxBucketSize: Int = 1024): DataFrame = {
+    require(numBands >= 1 && rowsPerBand >= 1,
+      s"minhashPairs: numBands ($numBands) and rowsPerBand ($rowsPerBand) " +
+        "must be >= 1")
     requireIntegralId(docs, idCol, "minhashPairs")
     val numPerms = numBands * rowsPerBand
     // portable hash stack (shingle / perm / band) so the whole pipeline —
@@ -67,25 +122,9 @@ object Dedup {
         explode(TextOps.portableBandsUdf(numBands, rowsPerBand)(
           TextOps.portableMinhashUdf(numPerms)(col("sh")))))
       .select("band", "id")
-    // candidate pairs from bucket MEMBER LISTS (one aggregation — the
-    // shingle+minhash lineage is evaluated once, not once per join side).
-    // The scale guard lives here too: a degenerate band key (boilerplate /
-    // empty docs) would make its bucket quadratic; such buckets carry no
-    // near-dup signal worth O(bucket²), so drop them (standard LSH
-    // practice). The cap also bounds the in-memory pair expansion below:
-    // maxBucketSize² / 2 tuples per bucket (1024 → ≤ ~524k pairs, ~8 MB).
-    val pairsUdf = udf { (ids: Seq[Long]) =>
-      val sorted = ids.sorted
-      for {
-        i <- sorted.indices
-        j <- (i + 1) until sorted.length
-      } yield (sorted(i), sorted(j))
-    }
-    val cands = allBands
-      .groupBy("band").agg(collect_list(col("id").cast("long")).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucketSize)
-      .select(explode(pairsUdf(col("ids"))).as("p"))
-      .select(col("p._1").as("left_id"), col("p._2").as("right_id"))
+    // a degenerate band key (boilerplate / empty docs) is dropped by
+    // [[bucketPairs]]' cap before its members are collected
+    val cands = bucketPairs(allBands, Seq("band"), "id", Nil, maxBucketSize)
       .dropDuplicates("left_id", "right_id")
     cands
       .join(sh.select(col("id").as("left_id"), col("sh").as("left_sh")), Seq("left_id"))
@@ -101,11 +140,12 @@ object Dedup {
     * least one chunk — pigeonhole), bucket-join on (band index, chunk),
     * exact-verify with `bit_count(xor)`.
     *
-    * `maxBucketSize` mirrors [[minhashPairs]]' guard: a degenerate chunk
+    * `maxBucketSize` is the [[bucketPairs]] cap: a degenerate chunk
     * (short/boilerplate docs collapsing to the same 16-bit value) would
-    * make its bucket's self-join quadratic; such buckets carry no usable
-    * near-dup signal at O(bucket²) cost, so they are dropped — standard
-    * LSH practice, bounding the candidate space at any corpus shape. */
+    * make its bucket quadratic; such buckets carry no usable near-dup
+    * signal at O(bucket²) cost, so they are dropped before their members
+    * are collected — standard LSH practice, bounding the candidate space
+    * and the per-bucket memory at any corpus shape. */
   def simhashPairs(
       docs: DataFrame,
       idCol: String,
@@ -133,8 +173,9 @@ object Dedup {
     * signature rides along with the id through the bucket pass, so the
     * verify needs no join back. Over-cap (degenerate) buckets emit
     * nothing, bounding worst-case candidate blowup; emitted pairs are
-    * exact (zero false positives), the cap is the only recall trade. */
-  /** @param pairParallelism explicit width for the bucket/pair-fan-out
+    * exact (zero false positives), the cap is the only recall trade.
+    *
+    * @param pairParallelism explicit width for the bucket/pair-fan-out
     *   exchange, 0 = leave it to the planner. Opt IN for corpora whose
     *   pair fan-out is the query's dominant compute (dedup_simhash: hot
     *   near-dup buckets, quadratic pair emission): AQE coalesces the
@@ -152,16 +193,14 @@ object Dedup {
       numBands: Int = 4,
       maxBucketSize: Int = 1024,
       pairParallelism: Int = 0): DataFrame = {
-    val bits = 64 / numBands
-    require(64 % numBands == 0, s"numBands must divide 64 ($numBands)")
+    require(numBands >= 1 && 64 % numBands == 0,
+      s"numBands must be >= 1 and divide 64 ($numBands)")
     require(maxHamming < numBands,
       s"pigeonhole needs maxHamming < numBands ($maxHamming >= $numBands)")
     requireIntegralId(sig0, idCol, "hamming64Pairs")
-    val spark = sig0.sparkSession
-    import spark.implicits._
+    val bits = 64 / numBands
     // null signatures (undecodable media in the dHash path this operator
-    // documents) cannot match anything — drop them instead of failing the
-    // non-nullable Long decode below
+    // documents) cannot match anything — drop them
     val sig = sig0.filter(col(hashCol).isNotNull)
       .select(col(idCol).cast("long").as("id"),
         col(hashCol).cast("long").as("sim"))
@@ -173,60 +212,11 @@ object Dedup {
       }: _*)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.chunk").as("chunk"),
         col("id"), col("sim"))
-    // candidate pairs from bucket member lists (ONE shuffle — the
-    // tokenize+simhash lineage is evaluated once, not once per self-join
-    // side; measured 2.7 s → ~1 s on the sf0.1 injected-dup corpus). The
-    // signatures ride along with the ids, so the Hamming verify needs no
-    // join back to `sig`. Cap semantics identical to the old
-    // size-filter+self-join form: an over-cap bucket emits nothing.
-    // collect_list + pair UDF, NOT groupByKey.flatMapGroups (the sibling
-    // minhashPairs shape): the typed path planned
-    // AppendColumns→Exchange→MapGroups — per-row Tuple4 ser/deser around
-    // an interpreted lambda, an 18 MB exchange for a ~1 MB bucket stream,
-    // and no partial aggregation (r19 profile: 1.27 cpu-s in one task).
-    // The agg form is whole-stage-codegen through the exchange and
-    // collects buckets map-side.
-    val bucketPairsUdf = udf { (ms: Seq[org.apache.spark.sql.Row]) =>
-      // over-cap (degenerate) buckets emit nothing — same loud-guard
-      // semantics as the typed form's early-stop, which only bounded
-      // MEMORY: the cap bounds the quadratic pair fan-out either way
-      if (ms.length < 2 || ms.length > maxBucketSize) Seq.empty[(Long, Long, Long, Long)]
-      else {
-        val arr = ms.map(r => (r.getLong(0), r.getLong(1))).toArray
-        java.util.Arrays.sort(arr, Ordering.by[(Long, Long), Long](_._1))
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long)](
-          arr.length * (arr.length - 1) / 2)
-        var i = 0
-        while (i < arr.length) {
-          var j = i + 1
-          while (j < arr.length) {
-            out += ((arr(i)._1, arr(j)._1, arr(i)._2, arr(j)._2))
-            j += 1
-          }
-          i += 1
-        }
-        out.toSeq
-      }
-    }
-    // pairParallelism > 0: explicit-width repartition, not the groupBy's
-    // own ENSURE_REQUIREMENTS exchange — the banded stream is under a
-    // megabyte, so AQE coalesces that exchange to ONE partition, and the
-    // quadratic pair fan-out downstream of it ran serial (r19 profile:
-    // one 1.1 cpu-s task). A user-specified partition count is exempt
-    // from AQE coalescing; the groupBy reuses the layout with no second
-    // exchange. Bytes-blind-but-compute-heavy is exactly the case AQE's
-    // size heuristic cannot see (guide §2.2) — but the forced width is a
-    // per-task fixed-cost tax on small inputs, so it is caller opt-in.
-    val pre =
-      if (pairParallelism > 0)
-        banded.repartition(pairParallelism, col("band"), col("chunk"))
-      else banded
-    val cands = pre
-      .groupBy("band", "chunk")
-      .agg(collect_list(struct(col("id"), col("sim"))).as("ms"))
-      .select(explode(bucketPairsUdf(col("ms"))).as("p"))
-      .select(col("p._1").as("left_id"), col("p._2").as("right_id"),
-        col("p._3").as("left_sim"), col("p._4").as("right_sim"))
+    // the signatures ride through [[bucketPairs]] as payload, so the
+    // Hamming verify needs no join back to `sig`; a degenerate chunk is
+    // dropped by its cap before its members are collected
+    bucketPairs(banded, Seq("band", "chunk"), "id", Seq("sim"),
+        maxBucketSize, pairParallelism)
       // verify BEFORE the dedup exchange: hamming is a pure function of
       // the two signatures, and a pair's signatures are identical across
       // its duplicates, so filter∘dropDuplicates ≡ dropDuplicates∘filter
@@ -235,7 +225,7 @@ object Dedup {
       .withColumn("hamming", TextOps.hamming64(col("left_sim"), col("right_sim")))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("left_id", "right_id")
-    cands.select("left_id", "right_id", "hamming")
+      .select("left_id", "right_id", "hamming")
   }
 
   /** Exact n-gram-Jaccard near-dup pairs via PPJoin-style prefix filtering
@@ -344,28 +334,6 @@ object Dedup {
       .select("left_id", "right_id", "jaccard")
   }
 
-  /** Sorted-neighborhood near-dup candidates (Hernández & Stolfo,
-    * SIGMOD '95 — the classic merge/purge blocking method): documents are
-    * grouped by a cheap BLOCKING key (their first `blockTokens` tokens),
-    * sorted within each block, and only rows within `window` positions of
-    * each other become candidates, each exact-verified with shingle
-    * Jaccard. The cheapest member of the dedup family — one window
-    * shuffle + one (block, rank) equi-join, no band replication, no
-    * prefix index — with the classic recall caveat: a near-dup pair whose
-    * first tokens differ lands in different blocks and is missed (that's
-    * what [[minhashPairs]]/[[jaccardPairs]] are for; SNM is the
-    * high-precision cheap pass a pipeline runs first).
-    *
-    * Scale shape: the rank window partitions by block key (parallel
-    * across blocks, linear within); candidates are `window-1` exploded
-    * probes meeting in ONE equi-join on (block, rank) — linear in corpus
-    * size × window, never quadratic, even for a degenerate block
-    * (candidates within a block are rank-banded, not all-pairs). Every
-    * step — tokenize, block, rank, probe, verify — replays in SQL.
-    *
-    * @return (left_id, right_id, jaccard), left_id < right_id; each
-    *         unordered pair appears at most once (one rank ordering)
-    */
   /** The SNM BLOCKING stage alone: window-banded candidate id pairs with
     * no similarity verify — the artifact blocking-quality evaluation
     * (`eval_blocking`) measures, and the cheap pre-filter a custom
@@ -416,6 +384,28 @@ object Dedup {
       .select("__lid", "__rid")
   }
 
+  /** Sorted-neighborhood near-dup candidates (Hernández & Stolfo,
+    * SIGMOD '95 — the classic merge/purge blocking method): documents are
+    * grouped by a cheap BLOCKING key (their first `blockTokens` tokens),
+    * sorted within each block, and only rows within `window` positions of
+    * each other become candidates, each exact-verified with shingle
+    * Jaccard. The cheapest member of the dedup family — one window
+    * shuffle + one (block, rank) equi-join, no band replication, no
+    * prefix index — with the classic recall caveat: a near-dup pair whose
+    * first tokens differ lands in different blocks and is missed (that's
+    * what [[minhashPairs]]/[[jaccardPairs]] are for; SNM is the
+    * high-precision cheap pass a pipeline runs first).
+    *
+    * Scale shape: the rank window partitions by block key (parallel
+    * across blocks, linear within); candidates are `window-1` exploded
+    * probes meeting in ONE equi-join on (block, rank) — linear in corpus
+    * size × window, never quadratic, even for a degenerate block
+    * (candidates within a block are rank-banded, not all-pairs). Every
+    * step — tokenize, block, rank, probe, verify — replays in SQL.
+    *
+    * @return (left_id, right_id, jaccard), left_id < right_id; each
+    *         unordered pair appears at most once (one rank ordering)
+    */
   def sortedNeighborhoodPairs(
       docs: DataFrame,
       idCol: String,
@@ -516,9 +506,8 @@ object Dedup {
     * Scale shape: linear explode to (doc, fingerprint) rows, ONE equi-join
     * on the fingerprint. Fingerprints appearing in more than `maxDocsPerFp`
     * documents are boilerplate (licence headers, markup) and are dropped
-    * BEFORE the self-join — the same degenerate-bucket cap as
-    * [[minhashPairs]], bounding the pair space at cap²·|fingerprints| instead
-    * of n². k ≤ 9 keeps the unreduced poly-31 gram hash below 2⁶³, so the
+    * BEFORE their members are collected — the [[bucketPairs]] cap,
+    * bounding the pair space at cap²·|fingerprints| instead of n². k ≤ 9 keeps the unreduced poly-31 gram hash below 2⁶³, so the
     * whole pipeline is replayable in overflow-checked SQL (the
     * `dedup_substring` DuckDB oracle recomputes it). */
   def winnowCandidates(
@@ -528,26 +517,15 @@ object Dedup {
       k: Int = 8,
       w: Int = 16,
       maxDocsPerFp: Int = 50): DataFrame = {
+    require(k >= 1 && w >= 1, s"winnowCandidates: k ($k) and w ($w) must be >= 1")
     require(k <= 9, s"k=$k overflows the SQL-portable unreduced poly-31 hash")
     requireIntegralId(docs, idCol, "winnowCandidates")
     val sk = docs.select(col(idCol).cast("long").as("id"),
       explode(TextOps.winnowUdf(k, w)(col(textCol))).as("fp"))
-    // pairs from fingerprint member lists in ONE grouped pass (the
-    // minhash/simhash bucket pattern): the winnow lineage is evaluated
-    // once, the cap and the pair expansion happen in the same aggregate.
-    // In-memory expansion is bounded by maxDocsPerFp²/2 tuples per
-    // fingerprint (50 → ≤ 1225).
-    val pairsUdf = udf { (ids: Seq[Long]) =>
-      val sorted = ids.sorted
-      for {
-        i <- sorted.indices
-        j <- (i + 1) until sorted.length
-      } yield (sorted(i), sorted(j))
-    }
-    sk.groupBy("fp").agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxDocsPerFp)
-      .select(explode(pairsUdf(col("ids"))).as("p"))
-      .select(col("p._1").as("left_id"), col("p._2").as("right_id"))
+    // one row per (fingerprint, pair) from [[bucketPairs]], which drops a
+    // boilerplate fingerprint at its cap before collecting its members;
+    // the pairs are not deduplicated there, so the count is n_shared
+    bucketPairs(sk, Seq("fp"), "id", Nil, maxDocsPerFp)
       .groupBy("left_id", "right_id")
       .agg(count(lit(1)).as("n_shared"))
   }

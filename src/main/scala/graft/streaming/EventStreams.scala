@@ -366,10 +366,11 @@ object EventStreams {
       maxBucketSize: Int = 1024,
       stateTtlMs: Long = 0L): org.apache.spark.sql.Dataset[SigMatch] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val bits = 64 / numBands
-    require(64 % numBands == 0, s"numBands must divide 64 ($numBands)")
+    require(numBands >= 1 && 64 % numBands == 0,
+      s"numBands must be >= 1 and divide 64 ($numBands)")
     require(maxHamming < numBands,
       s"pigeonhole needs maxHamming < numBands ($maxHamming >= $numBands)")
+    val bits = 64 / numBands
     val spark = media.sparkSession
     import spark.implicits._
     val banded = media

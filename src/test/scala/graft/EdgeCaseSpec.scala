@@ -50,6 +50,46 @@ class EdgeCaseSpec extends SparkSpec {
       .bigramCrossEntropy(empty, "doc_id", "text").count() === 0)
   }
 
+  /** `f` fails with an IllegalArgumentException naming `arg`, on the
+    * driver, before any Spark job starts. */
+  private def refusedOnDriver(arg: String)(f: => Any): Unit = {
+    val jobs = SpecUtil.jobsOf(spark) {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(arg), e.getMessage)
+    }
+    assert(jobs.isEmpty, s"${jobs.size} Spark job(s) ran before the refusal")
+  }
+
+  test("hamming64Pairs / phashMatches refuse numBands < 1 on the driver") {
+    val sig = Seq((1L, 0L), (2L, 1L)).toDF("media_id", "ph")
+    for (nb <- Seq(0, -1)) {
+      refusedOnDriver("numBands") {
+        Dedup.hamming64Pairs(sig, "media_id", "ph", maxHamming = -1, numBands = nb)
+      }
+      refusedOnDriver("numBands") {
+        graft.streaming.EventStreams.phashMatches(sig, "media_id", "ph",
+          maxHamming = -1, numBands = nb)
+      }
+    }
+  }
+
+  test("winnowCandidates refuses k < 1 or w < 1 on the driver") {
+    val docs = Seq((1L, "some text that is long enough")).toDF("doc_id", "text")
+    refusedOnDriver("w (0)") { Dedup.winnowCandidates(docs, "doc_id", "text", w = 0) }
+    refusedOnDriver("k (0)") { Dedup.winnowCandidates(docs, "doc_id", "text", k = 0) }
+    refusedOnDriver("k (-2)") { Dedup.winnowCandidates(docs, "doc_id", "text", k = -2) }
+  }
+
+  test("minhashPairs refuses numBands < 1 or rowsPerBand < 1 on the driver") {
+    val docs = Seq((1L, "a b c d"), (2L, "a b c d")).toDF("doc_id", "text")
+    refusedOnDriver("numBands (0)") {
+      Dedup.minhashPairs(docs, "doc_id", "text", numBands = 0)
+    }
+    refusedOnDriver("rowsPerBand (0)") {
+      Dedup.minhashPairs(docs, "doc_id", "text", rowsPerBand = 0)
+    }
+  }
+
   test("round-7 curation ops: degenerate inputs stay sane") {
     // single-stratum temperature keep: rate exactly 1, everything kept
     val one = Seq((1L, "en", "a"), (2L, "en", "b")).toDF("doc_id", "lang", "text")

@@ -141,6 +141,19 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("HashAggregate"), p.take(600))
   }
 
+  test("banded dedup candidates: the bucket-size Filter sits below the collect_list aggregate") {
+    // Dedup.bucketPairs sizes each bucket with a count window and drops
+    // over-cap buckets BEFORE collecting members: a degenerate band key
+    // must never become one task's in-memory member list
+    for (q <- Seq("dedup_minhash_lsh", "dedup_simhash", "dedup_substring",
+        "multimodal_phash")) {
+      val caps = BucketPairsSpec.capFilters(
+        SparkEntry.queries(q)(spark, sf0001).queryExecution.sparkPlan)
+      assert(caps.nonEmpty, s"$q has no collect_list aggregate")
+      assert(caps.forall(_.isDefined), s"$q collects a bucket before its size filter")
+    }
+  }
+
   test("text_bm25: query-term postings join broadcasts; no cartesian") {
     val p = plan("text_bm25")
     assert(p.contains("BroadcastHashJoin"), p.take(600))
