@@ -145,7 +145,7 @@ object Bench {
   /** Drain the async listener bus so the tally covers every stage of the
     * just-finished job. `listenerBus`/`waitUntilEmpty` are private[spark],
     * which compiles to public bytecode — plain reflection reaches them. */
-  private def drainListenerBus(spark: SparkSession): Unit =
+  private[graft] def drainListenerBus(spark: SparkSession): Unit =
     try {
       val sc = spark.sparkContext
       val lb = sc.getClass.getMethod("listenerBus").invoke(sc)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** 64-bit Hilbert-curve index of two integer keys — the locality-tighter
-  * sibling of [[ZOrder64]] (docs/NEXT.md #4): consecutive curve positions
+  * sibling of [[ZOrder64]]: consecutive curve positions
   * are always ADJACENT cells (Morton order jumps across the plane at
   * quadrant boundaries), so range scans over a Hilbert-sorted layout
   * touch fewer row groups for the same 2-D selectivity.

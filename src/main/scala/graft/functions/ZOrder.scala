@@ -8,7 +8,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * multi-column clustering primitive: sorting a table by `z(a, b)` before
   * writing makes Parquet row-group min/max ranges tight in BOTH columns,
   * so filters on either (or both) prune row groups, where a plain sort
-  * clusters only its leading column (docs/NEXT.md #4).
+  * clusters only its leading column.
   *
   * Keys live in the 32-bit domain: each input is CLAMPED to
   * [Int.MinValue, Int.MaxValue] before interleaving (a even positions, b

@@ -34,9 +34,10 @@ import org.apache.spark.storage.StorageLevel
   * wanting stochastic completeness add reverse edges or self-loops
   * upstream (the bipartite query does the former).
   *
-  * The four fixpoints — [[pageRank]], [[hits]], [[kCore]], [[bfsHops]] —
-  * share ONE engine on partition-preserving RDDs (a DataFrame loop
-  * re-plans joins and re-launches AQE stages every round). The graph is
+  * The five fixpoints — [[pageRank]], [[hits]], [[kCore]], [[bfsHops]],
+  * [[labelPropagation]] — share ONE engine on partition-preserving RDDs
+  * (a DataFrame loop re-plans joins and re-launches AQE stages every
+  * round). The graph is
   * collapsed once into hash-partitioned CSR block records ([[Block]]:
   * sorted `nodes`, list offsets, neighbor ids), and each round's node
   * state is a primitive `Array[Long]` aligned to a block's `nodes`,
@@ -44,7 +45,9 @@ import org.apache.spark.storage.StorageLevel
   * node sends a value along its list, summed per task by destination in
   * a primitive map — and one [[gather]] folding the destination
   * partition's sums into the next state array; its only shuffle ships
-  * one (keys, sums) array pair per destination partition. No per-node
+  * one (keys, sums) array pair per destination partition (label
+  * propagation's [[vote]] counts (destination, label) pairs instead of
+  * summing, with the same placement). No per-node
   * tuple is boxed, shuffled or persisted: Spark's SizeEstimator walking
   * such records on every persist was the larger part of these
   * operators' executor time. A record holds at most [[blockEdges]] list
@@ -53,7 +56,8 @@ import org.apache.spark.storage.StorageLevel
   * own slice. All recurrences are integer, so the output is
   * bit-identical under any partitioning or record layout
   * (LinkAnalysisSpec pins both). Integral ids run as longs; any other id
-  * type is dictionary-encoded once and decoded at output with a join.
+  * type is dictionary-encoded once and decoded at output with a join
+  * (label propagation instead casts every id to LONG).
   */
 object LinkAnalysis {
 
@@ -74,8 +78,6 @@ object LinkAnalysis {
   private def roundPartitionCount(spark: SparkSession, m: Long): Int =
     math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (m / EdgesPerPartition).toInt + 1))
-  private def roundPartitioner(spark: SparkSession, m: Long): HashPartitioner =
-    new HashPartitioner(roundPartitionCount(spark, m))
 
   /** RDD partitioner replicating a DataFrame `repartition(n, col)` hash
     * layout for a LONG key — `pmod(murmur3_hash(key, seed=42), n)`, the
@@ -253,17 +255,22 @@ object LinkAnalysis {
     new Graph(blocks, new DfLongHashPartitioner(nParts))
   }
 
+  /** The distinct values of `xs`, ascending. */
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    val sorted = xs.clone()
+    java.util.Arrays.sort(sorted)
+    var v = 0
+    for (x <- sorted) if (v == 0 || sorted(v - 1) != x) { sorted(v) = x; v += 1 }
+    java.util.Arrays.copyOf(sorted, v)
+  }
+
   /** One partition's (node, partner, isOut) entries → one CSR over its
     * sorted distinct nodes (counting sort, primitive arrays only) with
     * each list sorted and deduplicated, cut into records of at most
     * `budget` out + in entries. */
   private def toBlocks(n: Array[Long], p: Array[Long], o: Array[Boolean],
       withIn: Boolean, budget: Int): Iterator[Block] = {
-    val sorted = n.clone()
-    java.util.Arrays.sort(sorted)
-    var v = 0
-    for (x <- sorted) if (v == 0 || sorted(v - 1) != x) { sorted(v) = x; v += 1 }
-    val nodes = java.util.Arrays.copyOf(sorted, v)
+    val nodes = sortedDistinct(n)
     val (outOff, inOff) = (new Array[Int](nodes.length + 1), new Array[Int](nodes.length + 1))
     val at = n.map(java.util.Arrays.binarySearch(nodes, _))
     for (e <- n.indices) if (o(e)) outOff(at(e) + 1) += 1 else inOff(at(e) + 1) += 1
@@ -374,6 +381,113 @@ object LinkAnalysis {
     }
     if (prev == null) g.blocks.zipPartitions(msgs)((bs, ms) => recv(bs.map((_, null)), ms))
     else g.blocks.zipPartitions(prev, msgs)((bs, ss, ms) => recv(bs.zip(ss), ms))
+  }
+
+  /** One label propagation batch: parallel (destination, label, count)
+    * arrays. */
+  private type Votes = (Array[Long], Array[Long], Array[Long])
+
+  /** Open-addressing (destination, label) → count map (linear probing,
+    * no boxing): the per-task message combiner of [[vote]] and its
+    * receive side. */
+  private final class LabelCounts {
+    private var dst = new Array[Long](64)
+    private var lab = new Array[Long](64)
+    private var cnt = new Array[Long](64)
+    private var used = new Array[Boolean](64)
+    var size = 0
+    private def slot(d: Long, l: Long): Int = {
+      val mask = dst.length - 1
+      var i = java.lang.Long.hashCode(
+        (d * 0x9E3779B97F4A7C15L + l) * 0xC2B2AE3D27D4EB4FL) & mask
+      while (used(i) && (dst(i) != d || lab(i) != l)) i = (i + 1) & mask
+      i
+    }
+    def add(d: Long, l: Long, c: Long): Unit = {
+      val i = slot(d, l)
+      if (used(i)) cnt(i) += c
+      else {
+        used(i) = true; dst(i) = d; lab(i) = l; cnt(i) = c; size += 1
+        if (size * 2 > dst.length) rehash(dst.length * 2)
+      }
+    }
+    private def reset(cap: Int): Unit = {
+      dst = new Array[Long](cap); lab = new Array[Long](cap)
+      cnt = new Array[Long](cap); used = new Array[Boolean](cap); size = 0
+    }
+    private def rehash(cap: Int): Unit = {
+      val (ds, ls, cs, us) = (dst, lab, cnt, used)
+      reset(cap)
+      var i = 0
+      while (i < ds.length) { if (us(i)) add(ds(i), ls(i), cs(i)); i += 1 }
+    }
+    /** Moves the entries out as one batch per non-empty destination
+      * partition. */
+    def drain(part: DfLongHashPartitioner): Seq[(Int, Votes)] = {
+      val pid = new Array[Int](dst.length)
+      val n = new Array[Int](part.numPartitions)
+      for (i <- dst.indices) if (used(i)) { pid(i) = part.of(dst(i)); n(pid(i)) += 1 }
+      val batches = n.map(c => (new Array[Long](c), new Array[Long](c), new Array[Long](c)))
+      val fill = new Array[Int](n.length)
+      for (i <- dst.indices) if (used(i)) {
+        val (p, (ds, ls, cs)) = (pid(i), batches(pid(i)))
+        ds(fill(p)) = dst(i); ls(fill(p)) = lab(i); cs(fill(p)) = cnt(i); fill(p) += 1
+      }
+      reset(64)
+      n.indices.filter(n(_) > 0).map(p => (p, batches(p)))
+    }
+    /** The plurality label of each of the ascending `nodes` — most
+      * counted, the smallest on a tie; a node with no entry gets 0. */
+    def plurality(nodes: Array[Long]): Array[Long] = {
+      val (best, label) = (new Array[Long](nodes.length), new Array[Long](nodes.length))
+      for (i <- dst.indices) if (used(i)) {
+        val p = java.util.Arrays.binarySearch(nodes, dst(i))
+        if (cnt(i) > best(p) || (cnt(i) == best(p) && lab(i) < label(p))) {
+          best(p) = cnt(i); label(p) = lab(i)
+        }
+      }
+      label
+    }
+  }
+
+  /** One synchronous label propagation round: every node sends its label
+    * (its own id when `labels` is null) to each entry of its list;
+    * (destination, label) counts combine per task in a [[LabelCounts]]
+    * and ship as one batch per destination partition, placed like
+    * [[scatter]]'s — the round's one shuffle. The receive side folds its
+    * batches and gives each node its plurality label; a spanning node's
+    * copies read one partition-wide count, so they all agree. */
+  private def vote(g: Graph, labels: RDD[Array[Long]]): RDD[Array[Long]] = {
+    val part = g.part
+    def send(it: Iterator[(Block, Array[Long])]) = {
+      val votes = new LabelCounts
+      val batches = ArrayBuffer.empty[(Int, Votes)]
+      it.foreach { case (b, s) =>
+        var j = 0
+        while (j < b.nodes.length) {
+          val l = if (s == null) b.nodes(j) else s(j)
+          var k = b.off(j)
+          while (k < b.off(j + 1)) { votes.add(b.out(k), l, 1L); k += 1 }
+          j += 1
+        }
+        if (votes.size > CombineCap) batches ++= votes.drain(part)
+      }
+      (batches ++= votes.drain(part)).iterator
+    }
+    val msgs = (if (labels == null) g.blocks.mapPartitions(bs => send(bs.map((_, null))))
+      else g.blocks.zipPartitions(labels)((bs, ss) => send(bs.zip(ss))))
+      .partitionBy(new HashPartitioner(part.numPartitions))
+    g.blocks.zipPartitions(msgs) { (bs, ms) =>
+      val votes = new LabelCounts
+      ms.foreach { case (_, (ds, ls, cs)) =>
+        var i = 0
+        while (i < ds.length) { votes.add(ds(i), ls(i), cs(i)); i += 1 }
+      }
+      val blocks = bs.toArray
+      val nodes = sortedDistinct(blocks.flatMap(_.nodes))
+      val label = votes.plurality(nodes)
+      blocks.iterator.map(_.nodes.map(x => label(java.util.Arrays.binarySearch(nodes, x))))
+    }
   }
 
   /** Count of nodes whose state passes `p` (a spanning node counts once
@@ -1099,48 +1213,6 @@ object LinkAnalysis {
         sum(col("term")).as("aa_score_scaled"))
   }
 
-  /** One LPA plurality vote: per-node argmax (count DESC, label ASC) over
-    * incoming (node, label) messages — map-merge form: ONE node-keyed
-    * aggregateByKey whose combiner holds a per-node label→count map.
-    * Shuffle-count intuition said this should win (one shuffle vs two),
-    * but the ScaleSmoke "labelprop-vote" profile says otherwise: the
-    * LongMap-per-node combiner's allocation + map serialization costs
-    * ~2× the extra primitive-pair shuffle of [[votePreReduce]]
-    * (9.7–11.6 s vs 4.9–6.7 s on 10M messages, interleaved runs,
-    * identical checksums). Retained for the profile harness only; the
-    * production vote is [[votePreReduce]]. */
-  private[graft] def voteMapMerge(msgs: RDD[(Long, Long)],
-      part: org.apache.spark.Partitioner): RDD[(Long, Long)] = msgs
-    .aggregateByKey(
-      scala.collection.mutable.LongMap.empty[Long], part)(
-      (m, lab) => { m(lab) = m.getOrElse(lab, 0L) + 1L; m },
-      (a, b) => { b.foreach { case (lab, c) =>
-        a(lab) = a.getOrElse(lab, 0L) + c }; a })
-    .mapValues { m =>
-      var bestLab = Long.MaxValue; var bestC = -1L
-      m.foreach { case (lab, c) =>
-        if (c > bestC || (c == bestC && lab < bestLab)) {
-          bestLab = lab; bestC = c
-        }
-      }
-      bestLab
-    }
-
-  /** THE production vote (see [[voteMapMerge]] for the profile that
-    * picked it): pre-reduce (node, label) pair counts — map-side combine
-    * on the pair key collapses duplicate messages to primitive tuples —
-    * then a second node-keyed argmax reduce whose records are one
-    * (label, count) pair per node per map partition. Two shuffles, but
-    * both ship flat primitives; no per-node map objects anywhere. */
-  private[graft] def votePreReduce(msgs: RDD[(Long, Long)],
-      part: org.apache.spark.Partitioner): RDD[(Long, Long)] = msgs
-    .map { case (n, lab) => ((n, lab), 1L) }
-    .reduceByKey(new HashPartitioner(part.numPartitions), _ + _)
-    .map { case ((n, lab), c) => (n, (lab, c)) }
-    .reduceByKey(part, (x, y) =>
-      if (x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)) x else y)
-    .mapValues(_._1)
-
   /** Community detection by synchronous label propagation (Raghavan,
     * Albert & Kumara 2007, Phys. Rev. E 76): every node starts labeled
     * with its own id; each round, every node adopts the label held by the
@@ -1161,93 +1233,54 @@ object LinkAnalysis {
     * deterministic, and why `iterations` is a fixed parameter rather
     * than a convergence test.
     *
-    * Spark shape, per round: adjacency (built ONCE, hash-partitioned,
-    * lists longer than `hubSplit` sliced into several records) joins the
-    * node-sized label map narrowly and emits one (neighbor, label)
-    * message per edge; the
-    * round's ONLY shuffle is a node-sized `aggregateByKey` of partial
-    * per-node label-count maps (map-side combined, so what crosses the
-    * wire is one map per (node, sender-partition), not one record per
-    * edge), and the plurality argmax folds into the same pass. Round 1
-    * skips the join: the initial label of a source IS its id, already
-    * in the adjacency key. A node's count map is bounded by its
-    * neighbors' DISTINCT labels — worst case its degree, the same skew
-    * profile as receiving the messages at all; a mega-hub's inbound
-    * maps merge across its senders' combiners.
+    * Spark shape: one undirected block build (the shared engine's), then
+    * per round one [[vote]] — each node sends its label along its list,
+    * (destination, label) counts combine per task and cross the round's
+    * one shuffle as one array batch per destination partition, and the
+    * receive side picks every node's plurality label into the next
+    * state array, persisted and counted as the round's one action.
+    * Round 1 sends node ids (no state yet). A mega-hub's list spans
+    * block records like every fixpoint's; its copies read one
+    * partition-wide count, so the vote never depends on the layout.
     *
     * @param pairs undirected edges as a pair list (self-loops/nulls
     *              dropped, duplicates collapsed); node ids cast to LONG —
     *              labels are node ids, and the tiebreak needs a total
     *              order that replays in SQL
     * @return (node BIGINT, label BIGINT) — `label` is the community id
-    *         (some member's node id) after exactly `iterations` rounds
+    *         (some member's node id) after exactly `iterations` rounds;
+    *         empty with that schema when no edge remains
     */
   def labelPropagation(
       pairs: DataFrame,
       leftCol: String,
       rightCol: String,
-      iterations: Int = 4,
-      hubSplit: Int = 100000): DataFrame = {
-    require(iterations >= 0 && hubSplit >= 1)
+      iterations: Int = 4): DataFrame = {
+    require(iterations >= 0, s"iterations must be >= 0 (got $iterations)")
     val spark = pairs.sparkSession
-    val und = pairs
-      .select(col(leftCol).cast("long").as("a"), col(rightCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-    val e: RDD[(Long, Long)] = und.rdd
-      .flatMap { r =>
-        val u = r.getLong(0); val v = r.getLong(1)
-        Iterator((u, v), (v, u))
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val m = e.count()
-    val part = roundPartitioner(spark, m)
-    val adj: RDD[(Long, Array[Long])] = e.aggregateByKey(
-        scala.collection.mutable.ArrayBuffer.empty[Long], part)(
-        (b, d) => b += d, (a, b) => a ++= b)
-      .mapPartitions(_.flatMap { case (s, buf) =>
-        if (buf.length <= hubSplit) Iterator.single((s, buf.toArray))
-        else buf.grouped(hubSplit).map(g => (s, g.toArray))
-      }, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()
-    e.unpersist(blocking = false)
-    // one plurality vote — pair pre-reduce form, kept after profiling both
-    // candidates on the 10M-message smoke stream (ScaleSmoke
-    // "labelprop-vote": pre-reduce 4.9–6.7 s vs map-merge 9.7–11.6 s,
-    // interleaved runs, identical checksums; see NEXT.md)
-    def vote(msgs: RDD[(Long, Long)]): RDD[(Long, Long)] =
-      votePreReduce(msgs, part)
-    // the graph is symmetrized, so every node appears as a source; the
-    // round-1 message's label is the sender's id — no join needed
-    var labels: RDD[(Long, Long)] =
-      if (iterations == 0)
-        adj.mapValues(_ => ())
-          .reduceByKey(part, (a, _) => a)
-          .mapPartitions(_.map { case (n, _) => (n, n) },
-            preservesPartitioning = true)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      else vote(adj.flatMap { case (s, nbrs) => nbrs.iterator.map(d => (d, s)) })
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    for (_ <- 2 to iterations) {
+    val e = pairs
+      .select(col(leftCol).cast(LongType).as("a"), col(rightCol).cast(LongType).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+    val ids = Ids(LongType, null)
+    val fields = Seq(StructField("label", LongType, nullable = false))
+    val g = labelled(spark.sparkContext, "lpa build")(
+      buildGraph(e, directed = false, withIn = false))
+    if (g == null) return ids.empty(spark, fields)
+    var labels: RDD[Array[Long]] = null
+    for (round <- 1 to iterations) {
       val prev = labels
-      labels = vote(adj.join(prev, part)
-          .flatMap { case (_, (nbrs, lab)) =>
-            nbrs.iterator.map(d => (d, lab))
-          })
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      labels.count() // materialize before dropping the previous round
-      prev.unpersist(blocking = false)
+      labels = labelled(spark.sparkContext, s"lpa r$round: vote") {
+        val next = vote(g, prev).persist(StorageLevel.MEMORY_AND_DISK)
+        next.count()
+        next
+      }
+      if (prev != null) prev.unpersist(blocking = false)
     }
-    val rows = labels.map { case (node, lab) => Row(node, lab) }
-    val out = spark.createDataFrame(rows,
-        StructType(Seq(StructField("node", LongType, nullable = false),
-          StructField("label", LongType, nullable = false))))
-      .localCheckpoint(eager = true)
-    adj.unpersist(blocking = false)
-    labels.unpersist(blocking = false)
+    val rows = nodeRows(g, Option(labels).toSeq: _*) { (x, j, s) =>
+      Row(x, if (s.isEmpty) x else s.head(j))
+    }
+    val out = labelled(spark.sparkContext, "lpa output")(output(spark, rows, ids, fields))
+    (Option(labels).toSeq :+ g.blocks).foreach(_.unpersist(blocking = false))
     out
   }
 }

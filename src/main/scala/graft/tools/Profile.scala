@@ -49,20 +49,12 @@ object Profile {
       try {
         fn(spark, sfDir).count() // warmup
         // drain, then profile one run
-        try {
-          val sc = spark.sparkContext
-          val lb = sc.getClass.getMethod("listenerBus").invoke(sc)
-          lb.getClass.getMethod("waitUntilEmpty").invoke(lb)
-        } catch { case _: Throwable => Thread.sleep(100) }
+        Bench.drainListenerBus(spark)
         tally.rows.clear()
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        try {
-          val sc = spark.sparkContext
-          val lb = sc.getClass.getMethod("listenerBus").invoke(sc)
-          lb.getClass.getMethod("waitUntilEmpty").invoke(lb)
-        } catch { case _: Throwable => Thread.sleep(100) }
+        Bench.drainListenerBus(spark)
         import scala.jdk.CollectionConverters._
         val rows = tally.rows.asScala.toVector.sortBy(-_.cpuMs)
         val nStages = rows.size

@@ -90,6 +90,13 @@ class EdgeCaseSpec extends SparkSpec {
     }
   }
 
+  test("labelPropagation refuses iterations < 0 on the driver") {
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
+    for (it <- Seq(-1, -5)) refusedOnDriver(s"iterations must be >= 0 (got $it)") {
+      graft.operators.LinkAnalysis.labelPropagation(edges, "u", "v", iterations = it)
+    }
+  }
+
   test("round-7 curation ops: degenerate inputs stay sane") {
     // single-stratum temperature keep: rate exactly 1, everything kept
     val one = Seq((1L, "en", "a"), (2L, "en", "b")).toDF("doc_id", "lang", "text")

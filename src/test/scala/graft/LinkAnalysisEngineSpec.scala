@@ -144,9 +144,12 @@ class LinkAnalysisEngineSpec extends SparkSpec {
     val p = labels(LinkAnalysis.pageRank(df, "src", "dst", iterations = 4).collect())
     assert(Seq("pagerank build", "pagerank nodes", "pagerank r1-4: rank")
       .forall(p.contains), p.distinct)
+    val l = labels(LinkAnalysis.labelPropagation(df, "src", "dst", iterations = 3).collect())
+    assert(Seq("lpa build", "lpa r1: vote", "lpa r3: vote", "lpa output")
+      .forall(l.contains), l.distinct)
     // only the operators' own labels, and the caller's for its collect
-    val known = Seq("hits ", "kcore ", "bfs ", "pagerank ", "caller")
-    assert((h ++ k ++ b ++ p).forall(l => known.exists(l.startsWith)),
-      (h ++ k ++ b ++ p).distinct)
+    val known = Seq("hits ", "kcore ", "bfs ", "pagerank ", "lpa ", "caller")
+    assert((h ++ k ++ b ++ p ++ l).forall(x => known.exists(x.startsWith)),
+      (h ++ k ++ b ++ p ++ l).distinct)
   }
 }

@@ -1,6 +1,54 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, greatest, least}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
 import graft.operators.LinkAnalysis
+
+object LinkAnalysisSpec {
+
+  /** Label propagation as it ran before the block engine: boxed
+    * `aggregateByKey` adjacency over the LONG-cast, canonicalized and
+    * symmetrized edge set, and per round a `join` of the labels onto it
+    * plus the two-shuffle pre-reduce vote — count (node, label) pairs,
+    * then a node-keyed (count DESC, label ASC) argmax. */
+  def referenceLabelPropagation(pairs: DataFrame, leftCol: String,
+      rightCol: String, iterations: Int): DataFrame = {
+    val spark = pairs.sparkSession
+    val part = new HashPartitioner(spark.sparkContext.defaultParallelism)
+    val edges = pairs
+      .select(col(leftCol).cast("long").as("a"), col(rightCol).cast("long").as("b"))
+      .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
+      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
+      .distinct()
+      .rdd.flatMap { r =>
+        val (u, v) = (r.getLong(0), r.getLong(1))
+        Iterator((u, v), (v, u))
+      }
+    val adj = edges.aggregateByKey(ArrayBuffer.empty[Long], part)(
+      (b, d) => b += d, (a, b) => a ++= b).mapValues(_.toArray)
+    def vote(msgs: RDD[(Long, Long)]): RDD[(Long, Long)] = msgs
+      .map { case (n, lab) => ((n, lab), 1L) }
+      .reduceByKey(part, _ + _)
+      .map { case ((n, lab), c) => (n, (lab, c)) }
+      .reduceByKey(part, (x, y) =>
+        if (x._2 > y._2 || (x._2 == y._2 && x._1 < y._1)) x else y)
+      .mapValues(_._1)
+    var labels: RDD[(Long, Long)] = adj.map { case (n, _) => (n, n) }
+    for (_ <- 1 to iterations)
+      labels = vote(adj.join(labels, part).flatMap { case (_, (nbrs, lab)) =>
+        nbrs.iterator.map(d => (d, lab))
+      })
+    spark.createDataFrame(labels.map { case (n, l) => Row(n, l) },
+      StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("label", LongType, nullable = false))))
+  }
+}
 
 /** Fixed-point PageRank contract: mass conservation up to the documented
   * floor leak, hub dominance, degenerate damping endpoints, and layout
@@ -73,7 +121,8 @@ class LinkAnalysisSpec extends SparkSpec {
       LinkAnalysis.pageRank(df, "src", "dst", teleportSeeds = Seq(0L, 7L)),
       LinkAnalysis.hits(df, "src", "dst"),
       LinkAnalysis.kCore(df, "src", "dst", k = 2),
-      LinkAnalysis.bfsHops(df, "src", "dst", 1L, 3)
+      LinkAnalysis.bfsHops(df, "src", "dst", 1L, 3),
+      LinkAnalysis.labelPropagation(df, "src", "dst")
     ).map(_.collect().toSet)
     val whole = all()
     assert(whole.forall(_.nonEmpty))
@@ -216,10 +265,8 @@ class LinkAnalysisSpec extends SparkSpec {
 
   // ---- label propagation ----
 
-  private def lp(edges: Seq[(Long, Long)], iters: Int = 4,
-      hubSplit: Int = 100000): Map[Long, Long] =
-    LinkAnalysis.labelPropagation(edges.toDF("u", "v"), "u", "v",
-        iterations = iters, hubSplit = hubSplit)
+  private def lp(edges: Seq[(Long, Long)], iters: Int = 4): Map[Long, Long] =
+    LinkAnalysis.labelPropagation(edges.toDF("u", "v"), "u", "v", iterations = iters)
       .as[(Long, Long)].collect().toMap
 
   private def clique(ids: Seq[Long]): Seq[(Long, Long)] =
@@ -251,7 +298,7 @@ class LinkAnalysisSpec extends SparkSpec {
     assert(lp(noisy) === lp(base))
   }
 
-  test("LPA: bit-stable under repartitioning and hub slicing") {
+  test("LPA: bit-stable under repartitioning") {
     val rnd = new scala.util.Random(11)
     val edges = (for (i <- 0L until 30L; j <- (i + 1) until 30L
       if rnd.nextDouble() < 0.2) yield (i, j)).toSeq
@@ -260,8 +307,59 @@ class LinkAnalysisSpec extends SparkSpec {
         edges.toDF("u", "v").repartition(17), "u", "v", iterations = 4)
       .as[(Long, Long)].collect().toMap
     assert(repart === base)
-    assert(lp(edges, hubSplit = 2) === base,
-      "edge-partitioned hub slices must not change the vote")
+  }
+
+  /** The block-engine LPA equals the boxed reference — rows and schema. */
+  private def assertLpaMatchesReference(df: DataFrame,
+      iters: Int): Unit = {
+    val got = LinkAnalysis.labelPropagation(df, "u", "v", iterations = iters)
+    val want = LinkAnalysisSpec.referenceLabelPropagation(df, "u", "v", iters)
+    assert(got.schema === want.schema)
+    assert(got.collect().toSet === want.collect().toSet, s"iterations=$iters")
+  }
+
+  test("LPA equals the boxed reference on seeded random graphs") {
+    for (seed <- Seq(1, 2, 3); density <- Seq(0.05, 0.2)) {
+      val rnd = new scala.util.Random(seed)
+      val edges = for (i <- 0L until 40L; j <- (i + 1) until 40L
+        if rnd.nextDouble() < density) yield (i, j)
+      assertLpaMatchesReference(edges.toDF("u", "v"), 4)
+    }
+  }
+
+  test("LPA equals the boxed reference around a 400-leaf hub") {
+    val rnd = new scala.util.Random(17)
+    val hub = (1L to 400L).map(d => (0L, d))
+    val bg = Seq.fill(300)((rnd.nextInt(400).toLong + 1L, rnd.nextInt(400).toLong + 1L))
+    for (iters <- Seq(0, 1, 4))
+      assertLpaMatchesReference((hub ++ bg).toDF("u", "v"), iters)
+  }
+
+  test("LPA equals the boxed reference on noisy edges and cast ids") {
+    val base = clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(5L, 6L, 7L)) :+ (4L -> 5L)
+    val noisy = (base ++ base ++ base.map(_.swap) ++ Seq(2L -> 2L, 6L -> 6L))
+      .map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((None, Some(1L)), (Some(3L), None), (None, None))
+    for (iters <- Seq(0, 1, 4)) {
+      assertLpaMatchesReference(noisy.toDF("u", "v"), iters)
+      assertLpaMatchesReference(base.map { case (a, b) => (a.toInt, b.toInt) }
+        .toDF("u", "v"), iters)
+      assertLpaMatchesReference(base.map { case (a, b) => (a.toString, b.toString) }
+        .toDF("u", "v"), iters)
+    }
+  }
+
+  test("LPA on an empty edge set: empty (node BIGINT, label BIGINT) frame") {
+    for (df <- Seq(Seq.empty[(Long, Long)].toDF("u", "v"),
+        Seq((1L, 1L), (2L, 2L)).toDF("u", "v"),
+        Seq[(Option[Int], Option[Int])]((None, Some(1))).toDF("u", "v"))) {
+      val got = LinkAnalysis.labelPropagation(df, "u", "v")
+      assert(got.count() === 0)
+      assert(got.schema === StructType(Seq(
+        StructField("node", LongType, nullable = false),
+        StructField("label", LongType, nullable = false))))
+      assertLpaMatchesReference(df, 4)
+    }
   }
 
   // ---- BFS hop distances ----

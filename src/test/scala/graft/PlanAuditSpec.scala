@@ -845,7 +845,7 @@ class PlanAuditSpec extends SparkSpec {
       "and the single-scan alternative adds a corpus-sized exchange (or " +
       "a persist) that costs more than re-reading the pruned columns. " +
       "Candidates for the bm25-style collapse where the branch keys " +
-      "nest; ranked in NEXT.md"
+      "nest, ranked: text_dsir, the jaccard dedup family, dedup_fuzzy"
     val disjoint = "the scans read DISJOINT pushed-filter row subsets " +
       "(incremental state/delta simulation, modulo partitions, event-" +
       "type slices) — combined IO ~ one pass over the file"
