@@ -975,13 +975,19 @@ object AnnIvf {
     *    snapshot, not "whatever the directory holds when the scan runs";
     *  - the new layout (vectors + centroids + meta, same fp16/salt
     *    conventions — [[write]]) is staged beside `path` and published by
-    *    directory swap;
+    *    the directory swap [[Ingest.swap]] that compact uses too;
     *  - any vector file a concurrent appender landed AFTER the snapshot
     *    is moved from the retired dir back into the published layout
-    *    before the retired dir is deleted — a late micro-batch is never
+    *    before the retired dir is deleted, and an append whose commit
+    *    recreates `path` between the swap's two renames gets the staged
+    *    layout merged in beside it — a late micro-batch is never
     *    dropped; its rows keep their assigned partition_id (the parent of
     *    any split cell still exists, so late rows stay routable; they are
     *    candidates for the NEXT rebalance pass like any other row).
+    *
+    * Fixed cost as [[Ingest.compact]]: the snapshot is one
+    * [[Ingest.listDataFiles]] walk (no per-file permission lookup) and
+    * the pinned read ([[Ingest.readPinned]]) starts no job to relist it.
     *
     * A cell-less no-op (nothing hot, or every hot cell degenerate) leaves
     * the layout untouched. `onStaged` is the test seam between staging
@@ -1011,9 +1017,8 @@ object AnnIvf {
     require(snapshot.nonEmpty, s"rebalance: no vector files at $vectorsDir")
     // snapshot-pinned read of the durable layout (same decode path as
     // `read`, but against the listed files so a mid-pass append is
-    // excluded here and recovered below)
-    val raw = spark.read.option("basePath", vectorsDir.toString)
-      .parquet(snapshot.map(_.toString): _*)
+    // excluded here and recovered by the swap)
+    val raw = Ingest.readPinned(spark, vectorsDir, snapshot)
     val metaRow: Option[org.apache.spark.sql.Row] =
       try Some(spark.read.parquet(s"$path/meta").head())
       catch { case _: org.apache.spark.sql.AnalysisException => None }
@@ -1067,33 +1072,11 @@ object AnnIvf {
       fp16 = packedCol.isDefined, vecCol = vecCol,
       sq8 = sq8Col.isDefined, sq8BoundsOpt = sq8Bounds)
     onStaged()
-    val retired = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}__retired")
-    fs.delete(retired, true)
-    // dir-swap publish assumes rename is a metadata move — warn loud on
-    // copy+delete object stores where the swap windows widen per-object
-    graft.operators.warnIfNonAtomicRename(fs, target.toString, "rebalance")
-    require(fs.rename(target, retired), s"rebalance: cannot retire $target")
-    require(fs.rename(staging, target), s"rebalance: cannot publish $staging")
-    // recover vector files a concurrent appender landed after the snapshot
-    val retiredVectors = new org.apache.hadoop.fs.Path(retired, "vectors")
-    val snapshotRel =
-      snapshot.map(Ingest.relPath(fs, vectorsDir, _)).toSet
-    var recovered = 0L
-    Ingest.listDataFiles(fs, retiredVectors).foreach { f =>
-      val r = Ingest.relPath(fs, retiredVectors, f)
-      if (!snapshotRel.contains(r)) {
-        val dest = new org.apache.hadoop.fs.Path(vectorsDir, r)
-        fs.mkdirs(dest.getParent)
-        require(fs.rename(f, dest), s"rebalance: cannot restore late append $f")
-        recovered += 1L
-      }
-    }
-    fs.delete(retired, true)
+    val swapped = Ingest.swap(fs, target, staging, "vectors", snapshot, "rebalance")
     val published = read(spark, path)
     // read() always leaves nlist known (meta scalar or the bounded count)
     RebalanceStats(cellsBefore, published.nlist,
-      hotBefore, hotCount(published), recovered)
+      hotBefore, hotCount(published), swapped.late)
   }
 
   /** One request's centroid probe, computed on the driver by

@@ -1,6 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.functions._
 
 /** Batch ingest semantics from the reference's load path (SURVEY.md §3.1),
@@ -253,17 +257,17 @@ object Ingest {
     *
     * Concurrent-writer safe: the rewrite reads EXACTLY the files listed in
     * an up-front snapshot (not "whatever is in the directory when the scan
-    * runs"), and after the swap any COMMITTED data file that a concurrent
-    * appender landed AFTER the snapshot is moved from the retired dir back
-    * into the published dir before the retired dir is deleted — a late
+    * runs"), and the publish goes through [[swap]]: any COMMITTED data
+    * file that a concurrent appender landed AFTER the snapshot is moved
+    * from the retired dir back into the published dir — a late
     * micro-batch is never silently dropped; it just stays uncompacted
-    * until the next pass. If an append's commit recreates the target dir
-    * in the window between the two swap renames, the publish degrades to
-    * a file-by-file merge of the staged rewrite into the recreated dir
-    * (unique task UUIDs — no collisions). An append still IN FLIGHT at
-    * retire time (un-promoted `_temporary` attempt files) fails its
-    * commit loudly and retries cleanly — its half-written attempt files
-    * are never "restored" as live data. Returns (filesBefore, filesAfter).
+    * until the next pass. Returns (filesBefore, filesAfter).
+    *
+    * Fixed cost: the layout, the staged rewrite and the retired dir are
+    * each listed once, with [[listDataFiles]]; the file count after the
+    * pass comes from those listings. The rewrite reads the snapshot
+    * through [[readPinned]], so no Spark job relists the snapshot's
+    * files, however many there are.
     *
     * `onStaged` is a test seam invoked between the staged rewrite and the
     * directory swap — the window a concurrent append races into.
@@ -279,71 +283,123 @@ object Ingest {
       partitionCol: String,
       maxRecordsPerFile: Long = 4_000_000L,
       onStaged: () => Unit = () => ()): (Long, Long) = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(hconf)
-    def dataFiles(p: org.apache.hadoop.fs.Path) = listDataFiles(fs, p)
-    def rel(root: org.apache.hadoop.fs.Path, f: org.apache.hadoop.fs.Path) =
-      relPath(fs, root, f)
-    val snapshot = dataFiles(target)
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val snapshot = listDataFiles(fs, target)
     require(snapshot.nonEmpty, s"compact: no data files at $target")
-    val staging = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}__compacting")
+    val staging = new Path(target.getParent, s".${target.getName}__compacting")
     fs.delete(staging, true)
-    // basePath keeps partition-dir discovery while pinning the input set
-    // to the snapshot listing (files appended mid-rewrite are excluded
-    // here and recovered from the retired dir below — never read twice).
-    spark.read.option("basePath", target.toString)
-      .parquet(snapshot.map(_.toString): _*)
+    readPinned(spark, target, snapshot)
       .repartition(col(partitionCol))
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCol)
       .parquet(staging.toString)
     onStaged()
-    val retired = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}__retired")
+    val swapped = swap(fs, target, staging, "", snapshot, "compact")
+    (snapshot.size.toLong, swapped.staged + swapped.late)
+  }
+
+  /** The rows of exactly the data files `files` (from [[listDataFiles]])
+    * of the partitioned parquet layout rooted at `base`, partition
+    * columns discovered from the paths as `spark.read` with `basePath`
+    * would. The file index is seeded with the listed statuses, so
+    * planning lists nothing: `spark.read.parquet(files: _*)` would list
+    * every file again, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths
+    * (32) in a Spark job with one task per file. A file that lands in
+    * the layout after the listing is not read. Task-attempt files under
+    * `_temporary` are left out: they belong to an uncommitted append. */
+  private[graft] def readPinned(
+      spark: SparkSession,
+      base: Path,
+      files: Seq[FileStatus]): DataFrame = {
+    val committed = files.filterNot(_.getPath.toString.contains("/_temporary/"))
+    require(committed.nonEmpty, s"readPinned: no committed data files under $base")
+    val byPath = committed.map(f => f.getPath -> Array(f)).toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = byPath.get(p)
+      override def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val options = Map("basePath" -> base.toString)
+    val index = new InMemoryFileIndex(
+      spark, committed.map(_.getPath), options, None, listed)
+    val format = new ParquetFileFormat
+    val dataSchema = format.inferSchema(spark, options, index.allFiles())
+      .getOrElse(sys.error(s"readPinned: no parquet schema under $base"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      DatasetBridge.asNullable(dataSchema), None, format, options)(spark))
+  }
+
+  /** What [[swap]] published: the staged rewrite's data files, and the
+    * data files a concurrent appender landed after the snapshot that
+    * the published layout keeps. */
+  private[graft] final case class Swapped(staged: Long, late: Long)
+
+  /** The publish both [[compact]] and [[AnnIvf.rebalance]] end with:
+    * retire `target` to `.<name>__retired`, publish `staging` in its
+    * place, then move every committed data file under `recoverUnder`
+    * (relative to the layout root; "" for the root itself) of the
+    * retired dir that is not in `snapshot` back into the published
+    * layout, and delete the retired dir.
+    *
+    *  - A concurrent append can RECREATE `target` between the two
+    *    renames (its commit mkdirs the output path). The whole-dir
+    *    rename then either fails or moves staging INSIDE the recreated
+    *    dir (HDFS semantics; the local FS gets there by copying). Both degrade
+    *    to a file-by-file merge of the staged rewrite into the recreated
+    *    dir; appended files carry unique task UUIDs, so nothing collides
+    *    and nothing is lost.
+    *  - Task-attempt files of an append still IN FLIGHT at retire time
+    *    (`_temporary` trees) are not restored: they were never promoted,
+    *    and deleting the retired dir fails that append's commit LOUDLY,
+    *    so its retry lands cleanly.
+    *
+    * Lists the staged dir and the retired dir once each (plus the
+    * recreated target in the merge case). `afterRetire` is a test seam
+    * between the two renames. */
+  private[graft] def swap(
+      fs: FileSystem,
+      target: Path,
+      staging: Path,
+      recoverUnder: String,
+      snapshot: Seq[FileStatus],
+      site: String,
+      afterRetire: () => Unit = () => ()): Swapped = {
+    def under(root: Path) = if (recoverUnder.isEmpty) root else new Path(root, recoverUnder)
+    def move(from: Path, to: Path, what: String): Unit = {
+      fs.mkdirs(to.getParent)
+      require(fs.rename(from, to), s"$site: cannot $what $from")
+    }
+    val staged = listDataFiles(fs, staging).map(f => relPath(fs, staging, f.getPath))
+    val retired = new Path(target.getParent, s".${target.getName}__retired")
     fs.delete(retired, true)
-    // the swap below relies on dir rename being a metadata move — on
-    // copy+delete object stores the windows widen per-object; warn loud
-    graft.operators.warnIfNonAtomicRename(fs, target.toString, "compact")
-    require(fs.rename(target, retired), s"compact: cannot retire $target")
-    // publish. A concurrent append can RECREATE the target dir between
-    // the two renames (its commit mkdirs the output path): then the
-    // whole-dir rename either fails (local FS: dest exists) or — HDFS
-    // semantics — moves staging INSIDE the recreated dir. Detect both
-    // and degrade to a file-by-file merge of the staged rewrite into the
-    // recreated dir; the late batch's files carry unique task UUIDs, so
-    // nothing collides and nothing is lost.
+    // the swap relies on dir rename being a metadata move — on copy+delete
+    // object stores the windows widen per-object; warn loud
+    graft.operators.warnIfNonAtomicRename(fs, target.toString, site)
+    require(fs.rename(target, retired), s"$site: cannot retire $target")
+    afterRetire()
     val renamed = fs.rename(staging, target)
-    val nested = new org.apache.hadoop.fs.Path(target, staging.getName)
+    val nested = new Path(target, staging.getName)
     val mergeFrom =
       if (!renamed) Some(staging)
       else if (fs.exists(nested)) Some(nested)
       else None
-    mergeFrom.foreach { src =>
-      dataFiles(src).foreach { f =>
-        val dest = new org.apache.hadoop.fs.Path(target, rel(src, f))
-        fs.mkdirs(dest.getParent)
-        require(fs.rename(f, dest), s"compact: cannot merge staged $f")
-      }
+    val planted = mergeFrom.fold(0L) { src =>
+      val appended = listDataFiles(fs, target)
+        .count(f => !relPath(fs, target, f.getPath).startsWith(s"${nested.getName}/"))
+      staged.foreach(r => move(new Path(src, r), new Path(target, r), "merge staged"))
       fs.delete(src, true)
+      appended.toLong
     }
-    val snapshotRel = snapshot.map(rel(target, _)).toSet
-    dataFiles(retired).foreach { f =>
-      val r = rel(retired, f)
-      // skip task-attempt files of an append still IN FLIGHT at retire
-      // time (_temporary trees): "restoring" them would plant garbage
-      // the committer never promoted; deleting retired below instead
-      // fails that append's commit LOUDLY, and its retry lands cleanly
-      if (!snapshotRel.contains(r) && !r.contains("_temporary")) {
-        val dest = new org.apache.hadoop.fs.Path(target, r)
-        fs.mkdirs(dest.getParent)
-        require(fs.rename(f, dest), s"compact: cannot restore late append $f")
-      }
-    }
+    val snapshotRel = snapshot.map(f => relPath(fs, under(target), f.getPath)).toSet
+    val late = listDataFiles(fs, under(retired)).map(f => relPath(fs, under(retired), f.getPath))
+      .filter(r => !snapshotRel.contains(r) && !r.contains("_temporary"))
+    late.foreach(r => move(new Path(under(retired), r), new Path(under(target), r),
+      "restore late append"))
     fs.delete(retired, true)
-    (snapshot.size.toLong, dataFiles(target).size.toLong)
+    Swapped(staged.size.toLong, planted + late.size)
   }
 
   /** Dense per-partition ordinal (the reference's monotonically increasing
@@ -355,36 +411,41 @@ object Ingest {
         org.apache.spark.sql.expressions.Window
           .partitionBy(partitionCol).orderBy(idCol)) - 1)
 
-  /** Recursive listing of the parquet data files under `p` — the snapshot
-    * primitive both [[compact]] and [[AnnIvf.rebalance]] pin their reads
-    * to (concurrent appenders land files AFTER the listing; those are
-    * recovered from the retired dir post-swap, never read twice). */
-  private[operators] def listDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[org.apache.hadoop.fs.Path]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) b += f.getPath
-      }
-      b.result()
-    }
+  /** Recursive listing of the parquet data files under `p` (`p` itself
+    * when it is one; empty when it does not exist; `_temporary` attempt
+    * files included) — the snapshot primitive both [[compact]] and
+    * [[AnnIvf.rebalance]] pin their reads to (concurrent appenders land
+    * files AFTER the listing; those are recovered from the retired dir
+    * post-swap, never read twice).
+    *
+    * Listing cost: one `listStatus` per directory and nothing per file.
+    * `fs.listFiles` would build a `LocatedFileStatus` per file, whose
+    * constructor copies permission, owner and group; on the local
+    * filesystem without the native Hadoop library that copy forks an
+    * `ls -ld` per file. A directory that vanishes mid-walk (an append's
+    * `_temporary` tree, removed at commit) holds nothing to snapshot. */
+  private[graft] def listDataFiles(fs: FileSystem, p: Path): Seq[FileStatus] = {
+    val b = Seq.newBuilder[FileStatus]
+    def walk(s: FileStatus): Unit =
+      if (s.isDirectory) {
+        val children =
+          try fs.listStatus(s.getPath)
+          catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+        children.foreach(walk)
+      } else if (s.getPath.getName.endsWith(".parquet")) b += s
+    try walk(fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => () }
+    b.result()
   }
 
-  /** Path of `f` relative to `root`. listFiles returns scheme-qualified
+  /** Path of `f` relative to `root`. Listings return scheme-qualified
     * URIs; qualify the root the same way or relativize silently returns
     * the absolute path. */
-  private[operators] def relPath(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      f: org.apache.hadoop.fs.Path): String =
+  private[operators] def relPath(fs: FileSystem, root: Path, f: Path): String =
     fs.makeQualified(root).toUri.relativize(fs.makeQualified(f).toUri).getPath
 
   private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p)
   }

@@ -29,6 +29,11 @@ object DatasetBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `schema` with every field, array element and map value nullable —
+    * the schema a file source reports for what it infers
+    * (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
   /** localCheckpoint `df` (lazy by default — materialization folds into
     * the first consuming action instead of costing one job per call, the
     * GlobalRank discipline) and re-wrap it stats-free. */

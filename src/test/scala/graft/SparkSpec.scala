@@ -40,9 +40,12 @@ object SpecUtil {
     leaked
   }
 
-  /** What the Spark jobs `f` starts did: each job's properties, and the
-    * shuffle bytes their tasks wrote. */
-  final case class Jobs(props: Seq[java.util.Properties], shuffleBytes: Long)
+  /** What the Spark jobs `f` starts did: each job's properties, the
+    * shuffle bytes their tasks wrote, and, aligned with `props`, how many
+    * tasks each job ran (a stage counts toward the first job that
+    * submitted it). */
+  final case class Jobs(
+      props: Seq[java.util.Properties], shuffleBytes: Long, tasks: Seq[Int])
 
   /** The properties of every Spark job `f` starts. */
   def jobsOf(spark: SparkSession)(f: => Any): Seq[java.util.Properties] =
@@ -55,8 +58,10 @@ object SpecUtil {
   def jobStatsOf(spark: SparkSession)(f: => Any): Jobs = {
     val sc = spark.sparkContext
     val tag = s"graft-spec-jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, java.util.Properties)]
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    val jobTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
     val seen = new java.util.concurrent.atomic.AtomicInteger
     def ours(props: java.util.Properties) =
@@ -65,15 +70,21 @@ object SpecUtil {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         seen.incrementAndGet()
-        if (ours(js.properties)) jobs.add(js.properties)
+        if (ours(js.properties)) {
+          js.stageIds.foreach(stageJob.putIfAbsent(_, js.jobId))
+          jobs.add(js.jobId -> js.properties)
+        }
       }
       override def onStageSubmitted(
           ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
         if (ours(ss.properties)) stages.add(ss.stageInfo.stageId)
       override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         if (stages.contains(te.stageId) && te.taskMetrics != null)
           shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        if (stageJob.containsKey(te.stageId))
+          jobTasks.merge(stageJob.get(te.stageId), 1, _ + _)
+      }
     }
     def flush(): Unit = {
       val base = seen.get()
@@ -93,7 +104,9 @@ object SpecUtil {
       }
       flush()
       import scala.jdk.CollectionConverters._
-      Jobs(jobs.asScala.toSeq, shuffleBytes.get())
+      val started = jobs.asScala.toSeq
+      Jobs(started.map(_._2), shuffleBytes.get(),
+        started.map(j => jobTasks.getOrDefault(j._1, 0)))
     } finally sc.removeSparkListener(listener)
   }
 }
