@@ -66,30 +66,6 @@ class BenchLineSpec extends AnyFunSuite {
     assert(l1 === l2)
   }
 
-  test("micro-anchor normalization cancels a mid-run ambient shift the " +
-      "run-median anchor cannot") {
-    // simulated run: a query's 4 trials take 1 s of TRUE work; ambient
-    // doubles halfway through, so trials 3-4 wall-clock 2 s and the
-    // interleaved anchors track it (0.5 s before, 1.0 s after). The
-    // run-median anchor normalizes the whole run by one number — the
-    // per-query median still lands on a wrong-ambient sample. Micro
-    // normalization divides each sample by the ambient AROUND it, so
-    // every ratio comes out identical: the shift is fully cancelled.
-    val anchors = Vector(0.5, 0.5, 1.0, 1.0)
-    val dts = Vector(1.0, 1.0, 2.0, 2.0) // same true cost, shifted ambient
-    val idx = Vector(0, 1, 2, 3)
-    val norm = Bench.microNormalized(dts, idx, anchors)
-    // sample 1 straddles the shift (divisor (0.5+1.0)/2); the rest are flat
-    assert(norm(0) === 2.0 && norm(3) === 2.0)
-    assert(norm.max / norm.min <= 1.6,
-      s"shift not absorbed: $norm") // vs 2.0x raw spread before normalizing
-    // degenerate guards: zero anchors yield 0, index clamped to range
-    assert(Bench.microNormalized(Vector(1.0), Vector(5), Vector(0.0)) ===
-      Vector(0.0))
-    assert(Bench.microNormalized(Vector(1.0), Vector(9), Vector(0.5)) ===
-      Vector(2.0))
-  }
-
   test("current SparkEntry surface fits the driver tail with margin") {
     // the REAL query names at plausible sf0.1 medians: the emitted line
     // must stay under budget no matter how wide the values print

@@ -105,7 +105,7 @@ class CompactSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       // partition pruning still works on the pinned index
       assert(pinned.filter($"partition_id" === 3).count() === 225L)
     }
-    assert(jobs.tasks.forall(_ < snapshot.size), s"a job relisted the snapshot: ${jobs.tasks}")
+    assert(jobs.jobTasks.forall(_ < snapshot.size), s"a job relisted the snapshot: ${jobs.jobTasks}")
   }
 
   test("compact above the discovery threshold: same rows, no job as wide as the snapshot") {
@@ -118,9 +118,9 @@ class CompactSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val jobs = SpecUtil.jobStatsOf(spark) {
       counts = Ingest.compact(spark, dir, "partition_id")
     }
-    assert(jobs.tasks.nonEmpty)
-    assert(jobs.tasks.forall(_ < snapshot),
-      s"compaction ran a job with >= $snapshot tasks: ${jobs.tasks}")
+    assert(jobs.jobTasks.nonEmpty)
+    assert(jobs.jobTasks.forall(_ < snapshot),
+      s"compaction ran a job with >= $snapshot tasks: ${jobs.jobTasks}")
     assert(counts === (36L, 4L))
     assert(Ingest.listDataFiles(fsOf(dir), new Path(dir)).size === 4)
     val after = spark.read.parquet(dir)

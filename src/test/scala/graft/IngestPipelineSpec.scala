@@ -435,8 +435,7 @@ class IngestPipelineSpec extends SparkSpec {
     // own pass, not a second aggregation job over the batch — proven the
     // AnnMaintainSpec way: count scheduler jobs for two IDENTICAL ingests
     // (same source, bit-identical layouts), callback off vs on, and assert
-    // the counts are EQUAL. A FIFO-bus sentinel brackets each measurement
-    // so "all jobs observed" is deterministic, not a race.
+    // the counts are EQUAL.
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val idx = AnnIvf.build(emb.filter($"vec_id" < 300), "vec_id",
       "embedding", nlist = 3, seed = 7L)
@@ -448,39 +447,22 @@ class IngestPipelineSpec extends SparkSpec {
       .withColumn("vec_id", $"vec_id" + 1000)
     val srcDir = Files.createTempDirectory("oobjobssrc").toString
     late.coalesce(1).write.mode("overwrite").parquet(srcDir)
-    val total = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        total.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def flush(): Unit = {
-      val base = total.get()
-      spark.range(2).count() // sentinel: bus is FIFO, so observing it
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (total.get() == base && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      assert(total.get() > base, "listener never observed the sentinel job")
-    }
-    try {
-      def jobsFor(dir: String,
-          cb: Option[(Long, Double) => Unit]): Int = {
-        flush()
-        val before = total.get()
+    def jobsFor(dir: String, cb: Option[(Long, Double) => Unit]) =
+      SpecUtil.jobsOf(spark) {
         graft.streaming.EventStreams.annIngest(
           spark.readStream.schema(late.schema).parquet(srcDir),
           centers, s"$dir/vectors", "vec_id", onSq8OutOfBounds = cb)
           .awaitTermination(120000)
-        flush()
-        total.get() - before - 1 // minus this bracket's own sentinel
       }
-      val off = jobsFor(dirs(0), None)
-      val on = jobsFor(dirs(1), Some((_, _) => ()))
-      assert(on === off,
-        s"enabling the drift metric scheduled extra jobs: off=$off on=$on")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val offJobs = jobsFor(dirs(0), None)
+    val (off, on) = (offJobs.size, jobsFor(dirs(1), Some((_, _) => ())).size)
+    // the micro-batches run on the stream's own thread: a recorder that
+    // missed its jobs would compare the caller's jobs only, or 0 = 0
+    assert(off > 0, "no job of the ingest was attributed")
+    assert(offJobs.exists(_.getProperty("sql.streaming.queryId") != null),
+      "no job of the stream thread was attributed")
+    assert(on === off,
+      s"enabling the drift metric scheduled extra jobs: off=$off on=$on")
   }
 
   test("compact collapses micro-batch file storms, preserves rows + pruning layout") {
